@@ -168,7 +168,7 @@ def _bracket_pick(
     label_col: str,
     rank_col: str,
     accuracy: "int | None" = None,
-    window_ceiling: int = _BRACKET_WINDOW_CEILING,
+    window_ceiling: "int | None" = None,
     collect_picks: bool = False,
     n_hint: "int | None" = None,
 ):
@@ -221,6 +221,10 @@ def _bracket_pick(
     dt = dict(rel.dtypes).get(primary, "")
     if dt not in _NUMERIC_DTYPES and not dt.startswith("decimal"):
         return None
+    if window_ceiling is None:
+        # read at call time, not bound at def time, so the module
+        # setting is the one that applies
+        window_ceiling = _BRACKET_WINDOW_CEILING
     accuracy = _resolve_accuracy(accuracy, n_hint, window_ceiling)
     c = F.col(primary)
     slack = 2.0 / accuracy

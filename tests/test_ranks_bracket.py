@@ -127,25 +127,36 @@ def test_ntile_bracket_fused_two_blocking_rounds(spark, monkeypatch):
     )
 
 
-def test_ntile_bracket_falls_back_on_tiny_window_ceiling(spark):
+def test_ntile_bracket_falls_back_on_tiny_window_ceiling(spark, monkeypatch):
     # post-hoc ceiling check (r15 fuse): an over-ceiling tie block must
-    # still decline to the range path and the answer stand
+    # still decline to the range path and the answer stand.  The module
+    # ceiling is read at call time, so setting it here reaches the fused
+    # verify; the spy pins that the ceiling — not a bracket miss — is
+    # what declines.
     rows = [(i, 1.0) for i in range(100)]  # constant: one giant interval
     from duckdb_webhook_gateway_spark.operators import ranks
 
+    returned = []
+    real = ranks._fused_verify_pick
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        returned.append(out)
+        return out
+
+    monkeypatch.setattr(ranks, "_fused_verify_pick", spy)
     df = spark.createDataFrame(rows, "id bigint, v double")
-    old = ranks._BRACKET_WINDOW_CEILING
-    ranks._BRACKET_WINDOW_CEILING = 10
-    try:
-        out = global_ntile(
-            df, 4, tile_col="t", input_bytes=1 << 40, order_spec=SPEC
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        got = {r["id"]: r["t"] for r in out.collect()}
-    finally:
-        ranks._BRACKET_WINDOW_CEILING = old
-    assert "Scan ExistingRDD" in plan  # range path's checkpoint
-    assert got == _ntile_ref(spark, rows, 4)
+    global_ntile(df, 4, tile_col="t", input_bytes=1 << 40, order_spec=SPEC)
+    assert len(returned) == 1 and returned[0] is not None  # default: picks
+
+    monkeypatch.setattr(ranks, "_BRACKET_WINDOW_CEILING", 10)
+    out = global_ntile(
+        df, 4, tile_col="t", input_bytes=1 << 40, order_spec=SPEC
+    )
+    assert len(returned) == 2 and returned[1] is None  # ceiling declined
+    assert {r["id"]: r["t"] for r in out.collect()} == _ntile_ref(
+        spark, rows, 4
+    )
 
 
 def _q_ref(spark, rows, fracs, desc=False):
