@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import sys
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,8 +54,12 @@ class ReferenceTableManager:
             if os.path.isdir(path):
                 try:
                     self.spark.read.parquet(path).createOrReplaceTempView(entry)
-                except Exception:
-                    pass
+                except Exception as e:
+                    print(
+                        f"WARNING: reference table {entry!r} unreadable at "
+                        f"{path}: {e}; not registered",
+                        file=sys.stderr,
+                    )
 
     def read_upload(self, path: str, fmt: Optional[str] = None) -> DataFrame:
         """Extension-dispatched read, CSV or JSON only — anything else is an

@@ -18,6 +18,7 @@ cluster; they are confined to the per-event hot path where relations are
 from __future__ import annotations
 
 import inspect
+import sys
 from typing import Any, Callable, Optional
 
 from pyspark.sql import SparkSession
@@ -156,8 +157,14 @@ class UdfManager:
                 continue
             try:
                 fn = compile_udf(row["function_name"], row["function_code"])
-            except Exception:
-                continue  # reference logs and skips broken stored code
+            except Exception as e:
+                # the reference logs and skips broken stored code
+                print(
+                    f"WARNING: stored UDF {row['function_name']!r} of webhook "
+                    f"{webhook_id!r} does not compile: {e}; skipping it",
+                    file=sys.stderr,
+                )
+                continue
             self.spark.udf.register(
                 udf_full_name(webhook_id, row["function_name"]),
                 fn,

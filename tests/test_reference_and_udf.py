@@ -3,10 +3,13 @@ tests/test_reference_and_udf.py:17-444 and tests/test_integration.py:291-469."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from duckdb_webhook_gateway_spark.engine import WebhookConfig, execute_transform
 from duckdb_webhook_gateway_spark.engine.reference_tables import (
+    ReferenceTableManager,
     ref_table_name,
     sanitize_table_name,
 )
@@ -100,6 +103,20 @@ def test_reupload_replaces(gateway, spark, reference_table_rows):
     assert len(gateway.ref_tables.list(wid)) == 1
 
 
+def test_unreadable_reference_table_warns_on_reload(gateway, spark, capfd):
+    """A persisted reference table that no longer reads is left
+    unregistered, with a stderr warning naming its directory."""
+    broken = os.path.join(gateway.ref_tables.data_dir, "ref_broken")
+    os.makedirs(broken)
+    with open(os.path.join(broken, "part-0.parquet"), "wb") as fh:
+        fh.write(b"not parquet")
+    capfd.readouterr()
+    ReferenceTableManager(gateway.store)
+    err = capfd.readouterr().err
+    assert "WARNING: reference table 'ref_broken'" in err and broken in err
+    assert not spark.catalog.tableExists("ref_broken")
+
+
 def test_csv_reader(gateway, tmp_path):
     csv = tmp_path / "users.csv"
     csv.write_text(
@@ -187,6 +204,24 @@ def test_invalid_udf_code_rejected(gateway):
         gateway.udfs.register("whatever", "fn", "this is not python")
     with pytest.raises(ValueError):
         gateway.udfs.register("whatever", "fn", "def other():\n    pass\n")
+
+
+def test_broken_stored_udf_warns_and_is_skipped(gateway, capfd):
+    """Stored code that no longer compiles is skipped on reload, with a
+    stderr warning naming the webhook and the function."""
+    gateway.udfs.register("wh-1", "good", "def good(x: str) -> str:\n    return x\n")
+    gateway.udfs.register("wh-1", "bad", "def bad(x: str) -> str:\n    return x\n")
+
+    def _break(rows):
+        for row in rows:
+            if row["function_name"] == "bad":
+                row["function_code"] = "this is not python"
+
+    gateway.store.mutate_catalog("python_udfs", _break)
+    capfd.readouterr()
+    assert gateway.udfs.load_webhook_udfs("wh-1") == 1
+    err = capfd.readouterr().err
+    assert "WARNING: stored UDF 'bad' of webhook 'wh-1'" in err
 
 
 def test_udfs_loaded_before_processing(gateway, spark):
