@@ -60,7 +60,7 @@ class GatewayHTTPServer:
       reference's BackgroundTasks shape — lowest latency per event.
     - ``streaming=True``: ingestion appends to the Structured Streaming
       landing dir and a drain thread runs micro-batches — the
-      high-throughput topology (vectorized LATERAL transforms + parallel delivery, ~98 ev/s
+      high-throughput topology (per-shape-group transforms + parallel delivery, ~98 ev/s
       measured at batch=500 vs ~1.5 ev/s per-event).
     """
 

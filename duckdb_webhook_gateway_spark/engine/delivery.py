@@ -16,7 +16,7 @@ Two execution paths call :func:`deliver` (SURVEY §2A A10):
   cluster.  That path is at-least-once under task retry/speculation.
   If the session was launched with ``spark.speculation=true`` (Spark's
   default is off) ``StreamingGateway`` warns and widens the driver-pool
-  threshold for the RESOLVABLE fallback path, but the fingerprinted-group
+  threshold for the RESOLVABLE fallback path, but the shape-group
   main path still POSTs executor-side: routing it through the driver
   would collect transformed payloads driver-side, the anti-pattern the
   round-6 design removed (see

@@ -13,14 +13,21 @@ Reference semantics reproduced here:
 - temp views are UUID-named and dropped in ``finally`` for isolation
   (reference: src/app.py:448, 509-522, 541, 567-579)
 
-Spark-first notes: payloads are materialized through ``spark.read.json`` so
-nested objects become ``StructType`` (dot access ``nested.key1`` works
-natively — the reference relied on DuckDB's struct inference for the same,
-tests/test_event_processing.py:56-70) and arrays of objects become
-``ArrayType(StructType)`` (stronger than the reference, which documented
-array element access as broken, tests/test_event_processing.py:71).
+Spark-first notes: ``payload_schema`` walks the JSON driver-side with
+``spark.read.json``'s type rules, and the payload becomes an Arrow-backed
+``LocalTableScan``; so nested objects become ``StructType`` (dot access
+``nested.key1`` works natively — the reference relied on DuckDB's struct
+inference for the same, tests/test_event_processing.py:56-70) and arrays
+of objects become ``ArrayType(StructType)`` (stronger than the reference,
+which documented array element access as broken,
+tests/test_event_processing.py:71).  Columns keep the payload's key order.
 Schema is inferred per event, never cached — two events on one path may
-differ in shape, exactly like the reference.
+differ in shape, exactly like the reference.  Shapes the walker cannot
+type fall back to ``spark.read.json``.
+
+The same walker types the streaming micro-batch's shape groups, and
+``embed_ids`` + ``transform_events`` are the many-event form of
+filter + transform that both those groups and batch replay run.
 """
 
 from __future__ import annotations
@@ -35,14 +42,17 @@ from ..functions import rewrite_dialect
 from .results import shape_result
 
 PAYLOAD_MACRO = "{{payload}}"
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
 
 
-def _infer_spark_type(values: list):
-    """Driver-side JSON -> Spark type inference, mirroring spark.read.json:
-    int->Long, float->Double (int+float widen to Double), bool->Boolean,
-    str->String, dict->Struct (keys unioned across rows), list->Array.
-    Returns None when the values are not uniformly typeable (caller falls
-    back to executor-side read.json inference)."""
+def payload_schema(values: list):
+    """Driver-side JSON -> Spark type inference, with spark.read.json's type
+    rules: int->Long, float->Double (int+float widen to Double),
+    bool->Boolean, str->String, all-null->String, dict->Struct (keys
+    unioned across rows, in first-seen order), list->Array.  Called with
+    a payload's records, it returns the payload's per-event schema.
+    Returns None when the values are not uniformly typeable (mixed kinds,
+    ints outside int64); callers fall back to ``spark.read.json``."""
     from pyspark.sql import types as T
 
     non_null = [v for v in values if v is not None]
@@ -52,7 +62,9 @@ def _infer_spark_type(values: list):
     if kinds == {bool}:
         return T.BooleanType()
     if kinds <= {int} and not kinds & {bool}:
-        return T.LongType()
+        if all(_I64_MIN <= v <= _I64_MAX for v in non_null):
+            return T.LongType()
+        return None  # spark.read.json would type it as a decimal
     if kinds <= {int, float} and not kinds & {bool}:
         return T.DoubleType()
     if kinds == {str}:
@@ -65,14 +77,14 @@ def _infer_spark_type(values: list):
                     keys.append(k)
         fields = []
         for k in keys:
-            ft = _infer_spark_type([v.get(k) for v in non_null])
+            ft = payload_schema([v.get(k) for v in non_null])
             if ft is None:
                 return None
             fields.append(T.StructField(k, ft, True))
         return T.StructType(fields)
     if kinds == {list}:
         elems = [e for v in non_null for e in v]
-        et = _infer_spark_type(elems) if elems else T.StringType()
+        et = payload_schema(elems) if elems else T.StringType()
         if et is None:
             return None
         return T.ArrayType(et, True)
@@ -80,7 +92,7 @@ def _infer_spark_type(values: list):
 
 
 def _arrow_type(dtype):
-    """Spark type (from ``_infer_spark_type``) -> pyarrow type."""
+    """Spark type (from ``payload_schema``) -> pyarrow type."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -129,7 +141,7 @@ def payload_to_df(spark: SparkSession, payload: dict | list) -> DataFrame:
         raise TypeError(f"payload must be dict or list, got {type(payload).__name__}")
 
     if records and all(isinstance(r, dict) for r in records):
-        schema = _infer_spark_type(records)
+        schema = payload_schema(records)
         from pyspark.sql import types as T
 
         if isinstance(schema, T.StructType) and len(schema.fields) > 0:
@@ -156,11 +168,10 @@ def payload_to_df(spark: SparkSession, payload: dict | list) -> DataFrame:
 
 def _register_temp_payload(
     spark: SparkSession, payload: dict | list, prefix: str
-) -> tuple[str, DataFrame]:
+) -> str:
     name = f"{prefix}_{uuid.uuid4().hex}"
-    df = payload_to_df(spark, payload)
-    df.createOrReplaceTempView(name)
-    return name, df
+    payload_to_df(spark, payload).createOrReplaceTempView(name)
+    return name
 
 
 def substitute_macro(transform_query: str, view_name: str) -> str:
@@ -169,22 +180,65 @@ def substitute_macro(transform_query: str, view_name: str) -> str:
     return rewrite_dialect(transform_query.replace(PAYLOAD_MACRO, view_name))
 
 
-def transform_to_df(
-    spark: SparkSession, transform_query: str, payload: dict | list
-) -> tuple[DataFrame, str]:
-    """Build (but do not collect) the transform DataFrame.
+def embed_ids(id_col: str, payload_col: str, corr: str):
+    """``mapPartitions`` function over ``(id, payload JSON)`` rows that
+    re-tags each payload's records with the event id under ``corr``, one
+    JSON line per record: dict -> 1 line, list of dicts -> N lines.  It
+    runs on the executors, so payload bodies never reach the driver.
+    Malformed JSON, scalars and non-dict list elements are skipped."""
 
-    Returns (df, temp_view_name); caller must drop the view when done.
-    Exposed separately so the streaming layer can compose transforms
-    without driver-side collection.
+    def embed(rows):
+        for r in rows:
+            try:
+                p = json.loads(r[payload_col])
+            except (TypeError, ValueError):  # NULL or malformed JSON
+                continue
+            recs = [p] if isinstance(p, dict) else p if isinstance(p, list) else []
+            for rec in recs:
+                if isinstance(rec, dict):
+                    yield json.dumps({**rec, corr: r[id_col]})
+
+    return embed
+
+
+def transform_events(
+    spark: SparkSession,
+    view: str,
+    corr: str,
+    filter_query: str | None,
+    transform_query: str,
+) -> DataFrame:
+    """Filter + transform over MANY events' records at once.
+
+    ``view`` holds the records of many events, each tagged with its event
+    id in column ``corr`` (see ``embed_ids``).  Returns one row per event
+    that passes the filter (the existence gate of ``apply_filter``):
+    ``corr`` and ``rows``, the array of the transform's result rows for
+    that event, as structs in result-column order (empty for a 0-row
+    result).  The transform runs per event as a correlated subquery whose
+    ``{{payload}}`` binds to that event's records only, so aggregates,
+    LIMIT and the 0/1/N shaping stay per event.  Collecting each event's
+    rows into one array keeps them in record order: Spark decorrelates the
+    subquery into an aggregate per ``corr`` followed by a join on unique
+    keys, whereas a LATERAL join's hash table may be built over the
+    records and hand an event's rows back reversed.  Analyzed eagerly (a
+    bad filter or transform raises here); the view is resolved into the
+    plan, so the caller may drop it once nothing caches it.
     """
-    view, _ = _register_temp_payload(spark, payload, "temp_payload")
-    try:
-        df = spark.sql(substitute_macro(transform_query, view))
-    except Exception:
-        spark.catalog.dropTempView(view)
-        raise
-    return df, view
+    cols = ", ".join(f"`{c}`" for c in spark.table(view).columns if c != corr)
+    gate = (
+        f"WHERE {filter_query}"
+        if filter_query is not None and str(filter_query).strip()
+        else ""
+    )
+    ev = f"ev_{uuid.uuid4().hex[:12]}"  # no payload column can shadow it
+    inner = f"(SELECT {cols} FROM {view} WHERE {corr} = {ev}.{corr})"
+    return spark.sql(
+        f"SELECT {ev}.{corr} AS {corr}, "
+        f"(SELECT collect_list(struct(*)) "
+        f"FROM ({substitute_macro(transform_query, inner)}) t) AS `rows` "
+        f"FROM (SELECT DISTINCT {corr} FROM {view} {gate}) {ev}"
+    )
 
 
 def execute_transform(
@@ -192,11 +246,7 @@ def execute_transform(
 ) -> dict[str, Any]:
     """Run a transform query against a payload; shape per the 0/1/N contract
     (reference: execute_transform, src/app.py:434-522)."""
-    df, view = transform_to_df(spark, transform_query, payload)
-    try:
-        return shape_result(df)
-    finally:
-        spark.catalog.dropTempView(view)
+    return execute_event(spark, None, transform_query, payload)[1]
 
 
 def execute_event(
@@ -215,7 +265,7 @@ def execute_event(
 
     Returns (passed_filter, shaped_result); result is ``{}`` when gated.
     """
-    view, _ = _register_temp_payload(spark, payload, "temp_payload")
+    view = _register_temp_payload(spark, payload, "temp_payload")
     try:
         if filter_query is not None and str(filter_query).strip():
             probe = spark.sql(
@@ -242,7 +292,7 @@ def apply_filter(
     """
     if filter_query is None or not str(filter_query).strip():
         return True
-    view, _ = _register_temp_payload(spark, payload, "temp_filter")
+    view = _register_temp_payload(spark, payload, "temp_filter")
     try:
         probe = spark.sql(f"SELECT 1 AS hit FROM {view} WHERE {filter_query} LIMIT 1")
         return len(probe.take(1)) > 0

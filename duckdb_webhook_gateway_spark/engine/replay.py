@@ -6,14 +6,15 @@ history is wrong forever.  This engine's audit store is a partitioned
 lakehouse table, so reprocessing is a first-class BATCH operation: read
 the raw payload log (partition-pruned by time), stand the payloads up as
 one distributed relation, and run the per-event transform semantics as a
-single correlated-LATERAL query — one Spark job over any amount of
-history, instead of a per-event loop.
+single correlated query — one Spark plan over any amount of history,
+instead of a per-event loop.
 
 Semantics vs the ingest path:
 
 - The transform still runs PER EVENT: ``{{payload}}`` binds to only that
-  event's rows via ``__corr_id`` correlation, exactly like the streaming
-  vectorized path (streaming/webhook_source.py::_process_group_vectorized).
+  event's rows via id correlation — the same kernel
+  (engine/executors.py::embed_ids + transform_events) the streaming
+  shape groups run.
 - The filter predicate is the same existence gate (bare WHERE predicate,
   any qualifying row passes the event — engine/executors.py::apply_filter).
 - Schema inference is UNIFIED across the replayed range (missing keys
@@ -23,28 +24,28 @@ Semantics vs the ingest path:
   over the JSON instead of one Python pass per event.
 - Nothing is delivered and nothing is written: the result is a LAZY
   DataFrame of (raw_event_id, <transform output columns>) with 0/1/N
-  rows per event, for the caller to write, diff against
+  rows per event, in the order the transform yields them for that event
+  alone, for the caller to write, diff against
   transformed_events, or deliver explicitly.  With no ``schema`` and an
   EMPTY time range there is nothing to infer output columns from, so the
   frame has only ``raw_event_id`` — pass ``schema`` when looping over
   windows that may be empty and a stable schema matters.
 
-Scale: payloads never touch the driver (mapPartitions re-tags JSON
-line-by-line), the correlated lateral decorrelates into an equi-join on
-``__corr_id``, and the time filter prunes audit partitions before any
-JSON is parsed.
+Scale: payloads never touch the driver (``embed_ids`` re-tags JSON
+line-by-line on the executors), the correlated subquery decorrelates
+into an aggregate and an equi-join on the id, and the time filter prunes
+audit partitions before any JSON is parsed.
 """
 
 from __future__ import annotations
 
-import json
 import uuid
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import rewrite_dialect
+from .executors import embed_ids, transform_events
 
 
 _UNSET = object()
@@ -82,8 +83,8 @@ def replay_events(
 
     spark = gateway.spark
     # per-call correlation key: uuid-suffixed so a payload key can never
-    # collide with it and be silently clobbered (the streaming vectorized
-    # path detects '__corr_id' collisions and falls back per-event; batch
+    # collide with it and be silently clobbered (the streaming shape
+    # groups send '__corr_id' payloads to the per-event path; batch
     # replay has no per-event fallback, so it prevents instead)
     corr = f"__corr_{uuid.uuid4().hex[:12]}"
     ev = spark.table("raw_events").where(F.col("source_path") == path)
@@ -92,51 +93,27 @@ def replay_events(
     if until is not None:
         ev = ev.where(F.col("timestamp") < F.to_timestamp(F.lit(until)))
 
-    def _embed(rows):
-        # executor-side: re-tag each payload's JSON with its event id.
-        # dict -> 1 relation row, list-of-dict -> N rows (the reference's
-        # payload->relation rule, engine/executors.py:100); other shapes
-        # and malformed JSON are skipped, mirroring ingest-time rejection.
-        for r in rows:
-            try:
-                p = json.loads(r["payload"])
-            except Exception:
-                continue
-            if isinstance(p, dict):
-                yield json.dumps({**p, corr: r["id"]})
-            elif isinstance(p, list):
-                for el in p:
-                    if isinstance(el, dict):
-                        yield json.dumps({**el, corr: r["id"]})
-
-    rdd = ev.select("id", "payload").rdd.mapPartitions(_embed)
+    rdd = ev.select("id", "payload").rdd.mapPartitions(
+        embed_ids("id", "payload", corr)
+    )
     payload_df = (
         spark.read.schema(f"{corr} STRING, {schema}").json(rdd)
         if schema
         else spark.read.json(rdd)
     )
-    if corr not in payload_df.columns:  # empty range, nothing to infer
-        return spark.createDataFrame([], "raw_event_id string")
-    cols = ", ".join(f"`{c}`" for c in payload_df.columns if c != corr)
-    if not cols:  # every payload was an empty dict: no transform inputs
+    if set(payload_df.columns) <= {corr}:
+        # empty range (nothing to infer) or only empty-dict payloads (no
+        # transform inputs)
         return spark.createDataFrame([], "raw_event_id string")
 
     view = f"replay_{uuid.uuid4().hex}"
     payload_df.createOrReplaceTempView(view)
     try:
-        gate = (
-            f"WHERE {fq}" if fq is not None and str(fq).strip() else ""
-        )
-        ids = f"(SELECT DISTINCT {corr} FROM {view} {gate})"
-        inner = f"(SELECT {cols} FROM {view} WHERE {corr} = b.{corr})"
-        rewritten = rewrite_dialect(tq.replace("{{payload}}", inner))
         # spark.sql analyzes eagerly and resolves the view INTO the
         # returned plan, so the catalog entry can drop immediately — the
         # lazy result stays valid with no view leaked (and no global
         # cleanup state, which would race across sessions/threads)
-        return spark.sql(
-            f"SELECT b.{corr} AS raw_event_id, r.* "
-            f"FROM {ids} b, LATERAL ({rewritten}) r"
-        )
+        result = transform_events(spark, view, corr, fq, tq)
+        return result.select(F.col(corr).alias("raw_event_id"), F.inline("rows"))
     finally:
         spark.catalog.dropTempView(view)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import uuid
 from typing import Any, Optional
 
@@ -31,9 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine.audit import FILTERED_OUT_BODY
-from ..functions import rewrite_dialect
 from ..engine.delivery import deliver
-from ..engine.executors import execute_event
+from ..engine.executors import (
+    embed_ids,
+    execute_event,
+    payload_schema,
+    transform_events,
+)
 from ..engine.pipeline import Gateway
 from ..engine.store import new_id, now_utc
 
@@ -46,208 +51,64 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
-# envelope + executor-computed payload-shape fingerprint
+# envelope + executor-computed shape key (the payload's schema JSON)
 TAGGED_SCHEMA = T.StructType(
     list(ENVELOPE_SCHEMA.fields) + [T.StructField("fp", T.StringType(), True)]
 )
 
 
-# Fingerprint path encoding: key segments joined by unit separator \x1f
-# (keys containing it are declared unfingerprintable rather than risking
-# ambiguity), list descent marked by record separator \x1e.  The encoding
-# is injective, so the fingerprint doubles as a SCHEMA: every (path,
-# type) entry can be parsed back into a nested StructType without a data
-# pass (see schema_from_fingerprint).
-_SEP = "\x1f"
-_LIST = "\x1e"
-_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+def _has_empty_struct(dtype) -> bool:
+    if isinstance(dtype, T.StructType):
+        return not dtype.fields or any(
+            _has_empty_struct(f.dataType) for f in dtype.fields
+        )
+    if isinstance(dtype, T.ArrayType):
+        return _has_empty_struct(dtype.elementType)
+    return False
 
 
-def _shape_fingerprint(payload: Any) -> Optional[str]:
-    """Key-path + scalar-type signature; events sharing it infer the same
-    schema batched as they would individually (per-event inference
-    parity).  Returns None for shapes the vectorized path does not handle
-    (non-dict list elements, ``__corr_id`` collisions, keys containing
-    the path separator).
+def _group_key(payload: Any) -> Optional[str]:
+    """Shape-group key of one payload: its per-event schema
+    (``payload_schema``, the one the synchronous path builds its relation
+    with) as JSON.  A group reads its payloads with exactly that schema,
+    so each event is typed as it would be alone.  None sends the event to
+    the per-event path: non-dict records, schemas that are not a struct
+    (untypeable payloads), that hold an empty struct, or that have a
+    top-level ``__corr_id`` field, which the group's id column would
+    clobber.
 
-    Module-level pure function so executors can compute it inside the
-    tagging ``mapInPandas`` — grouping by shape happens distributively,
-    never by collecting payload bodies to the driver.
+    Module-level so the tagging ``mapInPandas`` computes it on the
+    executors — payload bodies never reach the driver for grouping.
     """
-
-    def sig(obj: Any, prefix: str, out: list) -> bool:
-        if isinstance(obj, dict):
-            if "__corr_id" in obj:
-                return False
-            if not obj:
-                # record emptiness: {} and {"a": {}} must not share a
-                # fingerprint (their per-event schemas differ)
-                out.append((prefix + _SEP + "#empty", "dict"))
-                return True
-            for k in sorted(obj):
-                if _SEP in k or _LIST in k:
-                    return False
-                if not sig(obj[k], prefix + _SEP + k, out):
-                    return False
-        elif isinstance(obj, list):
-            # Fingerprint EVERY element: a single float among ints
-            # would otherwise silently widen the whole batch group's
-            # inferred type away from the per-event inference result.
-            for el in obj:
-                if not sig(el, prefix + _SEP + _LIST, out):
-                    return False
-            out.append((prefix + _SEP + _LIST + "#len", len(obj) > 0))
-        elif isinstance(obj, bool):
-            out.append((prefix, "bool"))
-        elif isinstance(obj, int):
-            # int64 range matters for schema derivation: a wider literal
-            # must not silently read as NULL under a LongType schema
-            out.append(
-                (prefix, "int" if _I64_MIN <= obj <= _I64_MAX else "bigint")
-            )
-        else:
-            out.append((prefix, type(obj).__name__))
-        return True
-
-    out: list = []
-    if isinstance(payload, dict):
-        ok = sig(payload, "$", out)
-    elif isinstance(payload, list):
-        if not payload or not all(isinstance(e, dict) for e in payload):
-            return None
-        sigs = set()
-        ok = True
-        for e in payload:
-            el_out: list = []
-            if not sig(e, "$" + _SEP + _LIST, el_out):
-                ok = False
-                break
-            sigs.add(json.dumps(el_out))
-        if ok and len(sigs) != 1:
-            return None  # heterogeneous rows within one event -> per-event path
-        out.extend(json.loads(next(iter(sigs))) if ok and sigs else [])
-        out.append(("$#list", True))
-    else:
+    records = payload if isinstance(payload, list) else [payload]
+    if not all(isinstance(r, dict) for r in records):
         return None
-    return json.dumps(out) if ok else None
-
-
-def schema_from_fingerprint(fp: str) -> Optional[T.StructType]:
-    """Parse a shape fingerprint back into the StructType that
-    ``spark.read.json`` WOULD infer for payloads of that shape — no data
-    pass, no inference job.  Returns None for shapes whose inferred type
-    this parser does not model bit-for-bit (int64-overflowing literals,
-    mixed-kind arrays beyond int+float, empty dicts/lists) — callers
-    fall back to authoritative executor-side inference.  The equivalence
-    is property-tested against real read.json inference in
-    tests/test_streaming.py.
-
-    Scalar mapping (matching Spark's JSON inference): int -> Long,
-    float (and int+float mixes) -> Double, bool -> Boolean, str ->
-    String, all-null -> String.  Keys sort alphabetically exactly as
-    inference canonicalizes them (the fingerprint already records them
-    sorted).
-    """
-    try:
-        entries = json.loads(fp)
-    except Exception:
+    schema = payload_schema(records)
+    if (
+        not isinstance(schema, T.StructType)
+        or _has_empty_struct(schema)
+        or "__corr_id" in schema.names
+    ):
         return None
-
-    is_list_payload = any(p == "$#list" for p, _ in entries)
-    tree: dict = {}
-    TYPES = "__types__"
-    for path, tname in entries:
-        if path == "$#list":
-            continue
-        parts = path.split(_SEP)
-        if parts[0] != "$":
-            return None
-        parts = parts[1:]
-        if is_list_payload:
-            if not parts or parts[0] != _LIST:
-                return None
-            parts = parts[1:]
-        if parts and parts[-1] in ("#empty", _LIST + "#len"):
-            if parts[-1] == "#empty":
-                return None  # empty dict: inference drops/structs it — bail
-            # list-length marker: an empty list has no element entries and
-            # its inferred element type is not derivable — bail; non-empty
-            # lists carry element entries, the marker itself is a no-op
-            if tname is False:
-                return None
-            continue
-        node = tree
-        for seg in parts[:-1]:
-            node = node.setdefault(seg, {})
-            if not isinstance(node, dict):
-                return None
-        leaf = parts[-1] if parts else None
-        if leaf is None:
-            return None
-        slot = node.setdefault(leaf, {})
-        if not isinstance(slot, dict):
-            return None
-        slot.setdefault(TYPES, set()).add(tname)
-
-    def build(node: dict):
-        types = node.get(TYPES, set())
-        children = {k: v for k, v in node.items() if k != TYPES}
-        has_list_child = _LIST in children
-        if types and (children.keys() - {_LIST} or (has_list_child and types - {"NoneType"})):
-            return None  # same path both scalar and container -> bail
-        if has_list_child and len(children) > 1:
-            return None
-        if has_list_child:
-            elem = build(children[_LIST])
-            if elem is None:
-                return None
-            return T.ArrayType(elem, True)
-        if children:
-            fields = []
-            for k in sorted(children):
-                ft = build(children[k])
-                if ft is None:
-                    return None
-                fields.append(T.StructField(k, ft, True))
-            return T.StructType(fields)
-        kinds = set(types) - {"NoneType"}
-        if not kinds:
-            return T.StringType()
-        if kinds == {"bool"}:
-            return T.BooleanType()
-        if kinds == {"int"}:
-            return T.LongType()
-        if kinds <= {"int", "float"}:
-            return T.DoubleType()
-        if kinds == {"str"}:
-            return T.StringType()
-        return None  # bigint / mixed kinds -> authoritative inference
-
-    if not tree:
-        return None
-    out = build(tree)
-    if not isinstance(out, T.StructType) or not out.fields:
-        return None
-    return out
+    return schema.json()
 
 
 def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
     """Executor-side shape + deliver + audit for one (webhook, shape) group.
 
-    Returns a ``mapInArrow`` function over the three-way marker union
-    (role 2 = LATERAL result row, role 1 = gate-passing id, role 0 =
-    group member), repartitioned by ``__corr_id`` so every event's rows
-    live in exactly one task.  Per event: no role-1 row -> the
-    filtered-out audit row (constant body, no POST); otherwise apply the
-    0/1/N shaping contract with the SAME ``_plain`` conversions the
-    driver path used (Arrow ``to_pylist`` hands back exact Python values
-    — ints stay ints, SQL NULL stays None, no pandas NaN coercion), POST
-    the body through a bounded in-task thread pool, and emit the
-    finished ``transformed_events`` audit row.  Within-event row order
-    is the LATERAL's output order: an event's rows are produced
-    contiguously by one upstream task and shuffle fetch preserves
-    within-block order.  The ``timestamp`` column ships as an ISO
-    string; the store's distributed writer casts it to TimestampType.
+    Returns a ``mapInArrow`` function over the two-way marker union
+    (role 1 = gate-passing event with its ``rows`` array from
+    ``transform_events``, role 0 = group member), repartitioned by
+    ``__corr_id`` so every event's rows live in exactly one task.  Per
+    event: no role-1 row -> the filtered-out audit row (constant body, no
+    POST); otherwise apply the 0/1/N shaping contract to its rows, in
+    their array order, with the SAME ``_plain`` conversions the driver
+    path used (Arrow ``to_pylist`` hands back exact Python values — ints
+    stay ints, SQL NULL stays None, no pandas NaN coercion), POST the
+    body through a bounded in-task thread pool, and emit the finished
+    ``transformed_events`` audit row.  The ``timestamp`` column ships as
+    an ISO string; the store's distributed writer casts it to
+    TimestampType.
     """
 
     def shape_deliver(batches):
@@ -266,33 +127,29 @@ def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
             FILTERED_OUT_BODY as _FILTERED,
         )
 
-        groups: dict[str, list] = {}
-        passed: set = set()
+        shaped: dict[str, list] = {}
         order: list[str] = []
         for batch in batches:
             for row in batch.to_pylist():
                 cid = row["__corr_id"]
-                if cid not in groups:
-                    groups[cid] = []
+                if row["__role"] == 0:
                     order.append(cid)
-                role = row["__role"]
-                if role == 1:
-                    passed.add(cid)
-                elif role == 2:
-                    groups[cid].append(
-                        {c: _plain(row[c]) for c in out_cols}
-                    )
-        filtered = [cid for cid in order if cid not in passed]
-        order = [cid for cid in order if cid in passed]
+                else:
+                    shaped[cid] = [
+                        {c: _plain(r[c]) for c in out_cols}
+                        for r in row["rows"] or []
+                    ]
+        filtered = [cid for cid in order if cid not in shaped]
+        order = [cid for cid in order if cid in shaped]
         bodies = []
         for cid in order:
-            shaped = groups[cid]
-            if not shaped:
+            rows = shaped[cid]
+            if not rows:
                 transformed: dict[str, Any] = {}
-            elif len(shaped) == 1:
-                transformed = shaped[0]
+            elif len(rows) == 1:
+                transformed = rows[0]
             else:
-                transformed = {"results": shaped}
+                transformed = {"results": rows}
             bodies.append(transformed)
         # bounded in-task delivery pool: one slow destination stalls only
         # its own slot, and partition count stays modest (task overhead,
@@ -359,6 +216,16 @@ def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
             )
 
     return shape_deliver
+
+
+def _warn(batch_id: int, webhook_id: str, what: str, e: Exception) -> None:
+    """One stderr line for a shape group leaving the main path."""
+    msg = (str(e).strip().splitlines() or [""])[0]
+    print(
+        f"WARNING: streaming batch {batch_id} webhook {webhook_id}: {what} "
+        f"({type(e).__name__}: {msg})",
+        file=sys.stderr,
+    )
 
 
 class _GroupCommit:
@@ -527,18 +394,13 @@ class StreamingGateway:
         # checkpoint dir so wiping the checkpoint (which replays the
         # stream from scratch) resets it too.
         self._ledger_path = os.path.join(self.checkpoint_dir, "audit_ledger")
-        # fingerprint -> StructType: repeat shapes skip the executor-side
-        # inference pass entirely (bounded; fp space per deployment is
-        # the set of distinct payload shapes)
-        self._schema_cache: dict[str, Any] = {}
-        self._SCHEMA_CACHE_MAX = 1024
         # Delivery POSTs run inside Spark tasks (the audit write's
         # mapInArrow pass and the large-batch _resolve_deliveries job); a
         # speculative duplicate task double-POSTs with NO failure having
         # occurred.  spark.speculation is a launch-time core conf (not
         # runtime-settable), so the engine can't just turn it off here —
         # it warns loudly and keeps the driver pool for the RESOLVABLE
-        # fallback path only.  The fingerprinted-group main path still
+        # fallback path only.  The shape-group main path still
         # POSTs executor-side even under speculation: routing it through
         # the driver would collect transformed payloads driver-side — the
         # anti-pattern the round-6 design removed (pinned by
@@ -556,7 +418,7 @@ class StreamingGateway:
                 "spark.speculation=true: speculative tasks can duplicate "
                 "webhook delivery POSTs (at-least-once widens beyond "
                 "failure-retry). The fallback delivery path is routed to "
-                "the driver pool, but the fingerprinted-group audit path "
+                "the driver pool, but the shape-group audit path "
                 "still POSTs executor-side. Launch the streaming session "
                 "with speculation off for delivery workloads.",
                 RuntimeWarning,
@@ -666,27 +528,27 @@ class StreamingGateway:
         """foreachBatch body: set-oriented processing + batched audit appends.
 
         Payload bodies NEVER pass through the driver.  The batch is tagged
-        executor-side with a payload-shape fingerprint (``mapInPandas``),
-        the raw-event audit append is a distributed write, and each
-        (webhook, shape) group's payload relation is stood up with the
-        ``engine/replay.py`` re-tag pattern (``mapPartitions`` embeds the
-        event id into each payload's JSON on the executors).  The only
-        driver collection on the main path is metadata-width group
-        bookkeeping — (source_path, fp, event_id) triples.  Filter
+        executor-side with each payload's schema (``_group_key``, in a
+        ``mapInPandas``), the raw-event audit append is a distributed
+        write, and each (webhook, schema) group's payload relation is
+        stood up with the kernel batch replay also uses (``embed_ids``
+        tags each payload's JSON with its event id on the executors).
+        The only driver collection on the main path is metadata-width
+        group bookkeeping — (source_path, fp, event_id) triples.  Filter
         gating, transform, result shaping, delivery AND the transformed-
         event audit rows are one distributed plan per group, executed by
         the batch's single staged audit write.
 
-        Each group runs as TWO Spark queries — a vectorized filter gate
-        and a correlated LATERAL transform — instead of two queries *per
-        event*; the LATERAL rewrite executes the user's transform against
-        each event's own payload relation inside one job, so per-event
-        semantics (aggregates, LIMIT, 0/1/N shaping, filter-on-raw) are
-        preserved exactly.  A group whose shape cannot be fingerprinted
-        (non-dict list elements, ``__corr_id`` collisions, malformed
-        JSON) or whose vectorized run fails analysis falls back to the
-        per-event path — only THOSE groups' payloads are collected, the
-        bounded exotic tail.
+        Each group runs as ONE correlated query (``transform_events``: a
+        filter gate plus the transform against each event's own payload
+        relation) instead of two queries *per event*, so per-event
+        semantics (aggregates, LIMIT, 0/1/N shaping, filter-on-raw, row
+        order) are preserved exactly.  Events without a group key
+        (untypeable or non-dict shapes, empty structs, ``__corr_id``
+        collisions, malformed JSON) and groups whose run fails analysis
+        take the per-event path — only THOSE groups' payloads are
+        collected, the bounded exotic tail.  A group failure is reported
+        on stderr.
 
         Exactly-once AUDIT semantics on retry: a batch that already
         committed (ledger) is skipped outright, and the audit appends use
@@ -762,13 +624,18 @@ class StreamingGateway:
                     (F.col("source_path") == path) & (F.col("fp") == fp)
                 )
                 try:
-                    audit_df, drv_rows = self._process_group_distributed(
-                        webhook, grp, event_ids, fp, cleanups=group_cleanups
+                    audit_df = self._process_group_distributed(
+                        webhook, grp, event_ids, fp, group_cleanups
                     )
-                    if audit_df is not None:
-                        result_groups.append((path, fp, audit_df))
-                    tr_rows.extend(drv_rows)
-                except Exception:
+                    result_groups.append((path, fp, audit_df))
+                except Exception as e:
+                    _warn(
+                        batch_id,
+                        webhook["id"],
+                        "shape group failed analysis; processing its "
+                        "events one by one",
+                        e,
+                    )
                     fallback.append((path, fp))
 
             # exotic/failed tail: the ONLY payload-bearing collects, each
@@ -792,7 +659,15 @@ class StreamingGateway:
                         store.append_events_df(
                             "transformed_events", res_union, file_key=file_key
                         )
-                    except Exception:
+                    except Exception as e:
+                        ids = {webhooks[p]["id"] for p, _, _ in result_groups}
+                        _warn(
+                            batch_id,
+                            ",".join(sorted(ids)),
+                            "transformed-events write failed; re-running "
+                            "each shape group on its own",
+                            e,
+                        )
                         # The per-group try above only catches ANALYSIS-time
                         # errors — the transforms EXECUTE here.  One group's
                         # runtime failure (UDF exception, ANSI divide/cast on
@@ -817,7 +692,14 @@ class StreamingGateway:
                                     audit_df,
                                     file_key=f"{file_key}-g{gi:04d}",
                                 )
-                            except Exception:
+                            except Exception as ge:
+                                _warn(
+                                    batch_id,
+                                    webhooks[path]["id"],
+                                    "shape group failed at run time; "
+                                    "processing its events one by one",
+                                    ge,
+                                )
                                 late_rows.extend(
                                     self._per_event_rows(
                                         webhooks[path], path, fp, tagged
@@ -841,7 +723,7 @@ class StreamingGateway:
             tagged.unpersist(blocking=False)
 
     def _tag_shapes(self, batch_df: DataFrame) -> DataFrame:
-        """Envelope frame -> envelope + shape fingerprint, executor-side.
+        """Envelope frame -> envelope + shape-group key, executor-side.
 
         Malformed envelopes (null id/payload) are dropped here — the same
         skip the driver loop used to apply — and unparseable payload JSON
@@ -858,7 +740,7 @@ class StreamingGateway:
                 fps = []
                 for pj in pdf["payload_json"]:
                     try:
-                        fps.append(_shape_fingerprint(json.loads(pj)))
+                        fps.append(_group_key(json.loads(pj)))
                     except Exception:
                         fps.append(None)
                 yield pdf.assign(
@@ -981,120 +863,72 @@ class StreamingGateway:
                 response_body=outcome.response_body,
             )
 
-    # -- vectorized group processing --------------------------------------
-    # module-level function re-exposed for API stability
-    _shape_fingerprint = staticmethod(_shape_fingerprint)
-
+    # -- shape-group processing -------------------------------------------
     def _process_group_distributed(
         self,
         webhook: dict[str, Any],
         grp: DataFrame,
         event_ids: list[str],
-        fp: Optional[str] = None,
-        cleanups: Optional[list] = None,
-    ) -> tuple[Optional[DataFrame], list]:
+        fp: str,
+        cleanups: list,
+    ) -> DataFrame:
         """One (webhook, shape) group, payloads resident on executors.
 
-        The payload relation is stood up with the ``engine/replay.py:95``
-        re-tag pattern: ``mapPartitions`` embeds each event's id into its
-        payload JSON as ``__corr_id`` (safe — fingerprinting rejects
-        payloads carrying that key, so collisions route to the per-event
-        path).  The group schema comes from the shape fingerprint itself
-        when derivable (``schema_from_fingerprint`` — cached per fp, no
-        inference pass at all); shapes the parser does not model fall
-        back to distributed ``spark.read.json`` inference.  Either way,
-        uniform shape within the group makes the relation schema equal
-        per-event inference (the fingerprint-parity argument; the
-        derived-schema path is property-tested against real inference).
-        NOTHING event-bearing touches the driver: the filter gate, the
-        LATERAL transform, the 0/1/N shaping, the delivery POSTs and the
-        ``transformed_events`` audit rows (including filtered-out rows)
-        are ONE distributed plan — a three-way marker union (result rows
-        / gate-passing ids / group-member ids) repartitioned by event id
-        into a ``mapInArrow`` pass that shapes, delivers and audits, all
-        executor-side.  The caller appends the returned DataFrame with
-        the store's distributed idempotent writer (the same contract as
-        the raw-event path).  Arrow (not pandas) so null integers and
-        exact types survive: ``to_pylist`` yields the identical Python
-        values a driver ``Row`` would, with no NaN/float coercion.
-        Returns ``(audit_df, [])`` — the list is kept for signature
-        parity with the fallback path.  The payload relation's temp view
-        and cache must outlive the audit write, so cleanup registers
-        into ``cleanups`` for the caller to run after its appends
-        instead of a local finally.
+        The payload relation is stood up with the shared kernel of
+        ``engine/executors.py``: ``embed_ids`` tags each event's records
+        with its id as ``__corr_id`` (safe — ``_group_key`` sends payloads
+        carrying that key to the per-event path), read with the group's
+        schema ``fp`` — each event's own per-event schema, so the group
+        types every event exactly as the synchronous path does, with no
+        inference pass.  ``transform_events`` gates the events and runs
+        the transform per event.  NOTHING event-bearing touches the
+        driver: the gate, the transform, the 0/1/N shaping, the delivery
+        POSTs and the ``transformed_events`` audit rows (including
+        filtered-out rows) are ONE distributed plan — a two-way marker
+        union (gate-passing events with their result rows / group-member
+        ids) repartitioned by event id into a ``mapInArrow``
+        pass that shapes, delivers and audits, all executor-side.  The
+        caller appends the returned DataFrame with the store's
+        distributed idempotent writer (the same contract as the raw-event
+        path).  Arrow (not pandas) so null integers and exact types
+        survive: ``to_pylist`` yields the identical Python values a driver
+        ``Row`` would, with no NaN/float coercion.  The payload
+        relation's temp view and cache must outlive
+        the audit write (dropping the view would uncache it), so cleanup
+        registers into ``cleanups`` for the caller to run after its
+        appends instead of a local finally.
         """
         spark = self.spark
-
-        def _embed(rows):
-            for r in rows:
-                p = json.loads(r["payload_json"])
-                if isinstance(p, dict):
-                    yield json.dumps({**p, "__corr_id": r["event_id"]})
-                else:  # list of dicts -> N relation rows per event
-                    for el in p:
-                        yield json.dumps({**el, "__corr_id": r["event_id"]})
-
-        schema = None
-        if fp is not None:
-            if fp in self._schema_cache:
-                schema = self._schema_cache[fp]
-            else:
-                schema = schema_from_fingerprint(fp)
-                if len(self._schema_cache) >= self._SCHEMA_CACHE_MAX:
-                    self._schema_cache.clear()
-                self._schema_cache[fp] = schema
-
-        rdd = grp.select("event_id", "payload_json").rdd.mapPartitions(_embed)
-        if schema is not None:
-            full = T.StructType(
-                list(schema.fields)
-                + [T.StructField("__corr_id", T.StringType(), True)]
-            )
-            df = spark.read.schema(full).json(rdd).persist()
-        else:
-            df = spark.read.json(rdd).persist()
+        schema = T.StructType.fromJson(json.loads(fp)).add(
+            "__corr_id", T.StringType(), True
+        )
+        rdd = grp.select("event_id", "payload_json").rdd.mapPartitions(
+            embed_ids("event_id", "payload_json", "__corr_id")
+        )
+        df = spark.read.schema(schema).json(rdd).persist()
         view = f"batch_{uuid.uuid4().hex}"
         df.createOrReplaceTempView(view)
-        if cleanups is not None:
-            cleanups.append((view, df))
-        cols = ", ".join(f"`{c}`" for c in df.columns if c != "__corr_id")
-        filter_query = webhook.get("filter_query")
-        if filter_query is not None and str(filter_query).strip():
-            gate = f"WHERE {filter_query}"
-        else:
-            gate = ""
-        id_source = f"(SELECT DISTINCT __corr_id FROM {view} {gate})"
-        # Analysis-check the gate eagerly so a bad filter routes this
-        # group to the per-event fallback path (matching the collect-gate
-        # behavior this replaces); execution stays deferred.
-        pass_df = spark.sql(f"SELECT __corr_id FROM {id_source} g")
-
-        inner = f"(SELECT {cols} FROM {view} WHERE __corr_id = b.__corr_id)"
-        rewritten = rewrite_dialect(
-            webhook["transform_query"].replace("{{payload}}", inner)
+        cleanups.append((view, df))
+        # analyzed eagerly: a bad filter or transform raises here and
+        # routes this group to the per-event path; execution stays deferred
+        res_df = transform_events(
+            spark,
+            view,
+            "__corr_id",
+            webhook.get("filter_query"),
+            webhook["transform_query"],
         )
-        outer = (
-            f"SELECT b.__corr_id AS __corr_id, r.* "
-            f"FROM {id_source} b, LATERAL ({rewritten}) r"
-        )
-        res_df = spark.sql(outer)
-        out_cols = [c for c in res_df.columns if c != "__corr_id"]
-        # Three-way marker union, all distributed (no filter-gate collect,
-        # no driver-built filtered rows): role 2 = transform result row,
-        # role 1 = event passed the gate (guarantees 0-row transforms
-        # still deliver `{}`), role 0 = group member (events with no role-1
-        # row audit as filtered-out).  The id relations are id-width.
-        all_ids = grp.select(F.col("event_id").alias("__corr_id"))
-        marked = (
-            res_df.withColumn("__role", F.lit(2))
-            .unionByName(
-                pass_df.withColumn("__role", F.lit(1)),
-                allowMissingColumns=True,
-            )
-            .unionByName(
-                all_ids.withColumn("__role", F.lit(0)),
-                allowMissingColumns=True,
-            )
+        out_cols = res_df.schema["rows"].dataType.elementType.names
+        # Two-way marker union, all distributed (no filter-gate collect,
+        # no driver-built filtered rows): role 1 = event passed the gate,
+        # with its result rows (an empty array still delivers `{}`), role
+        # 0 = group member (events with no role-1 row audit as
+        # filtered-out).  The member relation is id-width.
+        marked = res_df.withColumn("__role", F.lit(1)).unionByName(
+            grp.select(F.col("event_id").alias("__corr_id")).withColumn(
+                "__role", F.lit(0)
+            ),
+            allowMissingColumns=True,
         )
         # ~512 events per task with an 8-thread delivery pool inside each:
         # delivery concurrency without the task-scheduling and output-file
@@ -1102,7 +936,7 @@ class StreamingGateway:
         # bounded at cluster scale (a fixed small cap would funnel a
         # million-event group through 8 tasks)
         nparts = max(1, min(1024, (len(event_ids) + 511) // 512))
-        audit_df = marked.repartition(nparts, "__corr_id").mapInArrow(
+        return marked.repartition(nparts, "__corr_id").mapInArrow(
             _make_shape_deliver(
                 webhook["id"], webhook["destination_url"], out_cols
             ),
@@ -1111,7 +945,6 @@ class StreamingGateway:
             "destination_url string, success boolean, "
             "response_code int, response_body string",
         )
-        return audit_df, []
 
     def _process_one(
         self, webhook: dict[str, Any], raw_event_id: str, payload: dict | list

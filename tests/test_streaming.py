@@ -514,16 +514,13 @@ def test_group_commit_ack_bounded_under_sustained_ingest(gateway):
     assert gc._flusher is not None and gc._flusher.daemon
 
 
-def test_schema_from_fingerprint_matches_real_inference(spark):
-    """The fingerprint-derived StructType must equal what spark.read.json
-    actually infers for payloads of that shape — bit-for-bit, or the
-    derived-schema fast path would silently change vectorized-group
-    semantics.  Shapes the parser cannot model exactly must return None
-    (authoritative inference fallback), never a wrong schema."""
-    from duckdb_webhook_gateway_spark.streaming.webhook_source import (
-        _shape_fingerprint,
-        schema_from_fingerprint,
-    )
+def test_stream_stores_same_body_as_sync_ingest(spark, tmp_path):
+    """A streamed event's stored ``transformed_payload`` is byte-identical
+    to what ``Gateway.ingest`` stores for the same payload, whichever
+    streaming path (shape group or per-event) the event takes: key order,
+    empty containers, int64-overflowing literals, ``__corr_id`` keys and
+    heterogeneous list rows included."""
+    from duckdb_webhook_gateway_spark.engine import Gateway
 
     payloads = [
         {"a": 1, "b": "x"},
@@ -536,34 +533,83 @@ def test_schema_from_fingerprint_matches_real_inference(spark):
         {"m": None, "a": 3},
         [{"r": 1}, {"r": 2}],
         {"deep": [{"xs": [1, 2]}]},
-        {"zz": "s", "aa": 1},  # alphabetical field canonicalization
         {"l": [1, None, 3]},
-        {"dot.key": 1},  # separator-encoded paths keep dotted keys exact
-    ]
-    for p in payloads:
-        fp = _shape_fingerprint(p)
-        assert fp is not None, p
-        derived = schema_from_fingerprint(fp)
-        assert derived is not None, p
-        recs = p if isinstance(p, list) else [p]
-        inferred = spark.read.json(
-            spark.sparkContext.parallelize(
-                [json.dumps(r) for r in recs], 1
-            )
-        ).schema
-        assert derived == inferred, (p, derived, inferred)
-
-    # shapes the parser must refuse -> inference fallback, never a guess
-    for p in [
-        {"a": []},
-        {"a": {}},
-        {"big": 2**70},
+        {"dot.key": 1},
         {"m": [1, "s"]},
         {"m": [1, {"k": 2}]},
-    ]:
-        fp = _shape_fingerprint(p)
-        if fp is not None:
-            assert schema_from_fingerprint(fp) is None, p
+        {"zz": "s", "aa": 1},
+        {"zz": "t", "aa": 2},
+        {"a": {}},
+        {"a": []},
+        {"big": 2**70},
+        {"__corr_id": "x", "a": 1},
+        {"n": {"__corr_id": "x", "b": 2}},
+        [{"a": 1, "c": "p"}, {"b": "x"}],
+    ]
+    config = WebhookConfig(
+        source_path="/parity",
+        destination_url="http://example.com/sink",
+        transform_query="SELECT * FROM {{payload}}",
+    )
+
+    def stored(ids):
+        body = {
+            r.raw_event_id: r.transformed_payload
+            for r in spark.sql("SELECT * FROM transformed_events").collect()
+        }
+        return [body[i] for i in ids]
+
+    sync = Gateway(spark, workdir=str(tmp_path / "sync"))
+    sync.register_webhook(config)
+    want = stored([sync.ingest("/parity", p).raw_event_id for p in payloads])
+
+    streamed = Gateway(spark, workdir=str(tmp_path / "stream"))
+    streamed.register_webhook(config)
+    sg = StreamingGateway(streamed)
+    ids = [sg.ingest("/parity", p) for p in payloads]
+    sg.run_available()
+    got = stored(ids)
+    assert [
+        (p, g, w) for p, g, w in zip(payloads, got, want) if g != w
+    ] == []
+    assert json.loads(got[payloads.index({"zz": "s", "aa": 1})]) == {
+        "zz": "s",
+        "aa": 1,
+    }
+
+
+def test_group_analysis_failure_warns_and_audits_per_event(
+    gateway, spark, capfd
+):
+    """A group whose filter fails analysis falls back to the per-event
+    path, which audits an "Error: ..." row per event; the fallback is
+    reported on stderr with the batch id, webhook id and exception."""
+    wid = gateway.register_webhook(
+        WebhookConfig(
+            source_path="/badfilter",
+            destination_url="http://example.com/sink",
+            transform_query="SELECT a FROM {{payload}}",
+            filter_query="no_such_column > 1",
+        )
+    )["id"]
+    sg = StreamingGateway(gateway)
+    ids = [sg.ingest("/badfilter", {"a": i}) for i in range(3)]
+    capfd.readouterr()
+    sg.run_available()
+    err = capfd.readouterr().err
+    tr = {
+        r.raw_event_id: r
+        for r in spark.sql("SELECT * FROM transformed_events").collect()
+    }
+    assert set(tr) == set(ids)
+    for i in ids:
+        assert tr[i].success is False
+        assert tr[i].response_body.startswith("Error:")
+    warned = [line for line in err.splitlines() if "WARNING" in line]
+    assert any(
+        "batch 0" in line and wid in line and "no_such_column" in line
+        for line in warned
+    ), err
 
 
 def test_batch_replay_is_idempotent(gateway, spark):
