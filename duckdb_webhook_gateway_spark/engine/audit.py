@@ -18,6 +18,32 @@ from .store import TableStore, new_id, now_utc
 FILTERED_OUT_BODY = "Filtered out by filter_query"
 
 
+def transformed_row(
+    raw_event_id: str,
+    webhook_id: str,
+    transformed_payload: dict[str, Any],
+    destination_url: str,
+    success: bool,
+    response_code: Optional[int],
+    response_body: Optional[str],
+) -> dict[str, Any]:
+    """One ``transformed_events`` audit row with a fresh id and timestamp
+    (reference: src/app.py:379-432).  Pure and module-level, so the
+    synchronous path, the streaming fallback and the executor-side
+    shape-group pass all build their rows here."""
+    return {
+        "id": new_id(),
+        "raw_event_id": raw_event_id,
+        "webhook_id": webhook_id,
+        "timestamp": now_utc(),
+        "transformed_payload": json.dumps(transformed_payload, default=str),
+        "destination_url": destination_url,
+        "success": bool(success),
+        "response_code": int(response_code) if response_code is not None else None,
+        "response_body": response_body,
+    }
+
+
 class AuditLog:
     def __init__(self, store: TableStore):
         self.store = store
@@ -47,24 +73,17 @@ class AuditLog:
         response_code: Optional[int],
         response_body: Optional[str],
     ) -> str:
-        event_id = new_id()
-        self.store.append_events(
-            "transformed_events",
-            [
-                {
-                    "id": event_id,
-                    "raw_event_id": raw_event_id,
-                    "webhook_id": webhook_id,
-                    "timestamp": now_utc(),
-                    "transformed_payload": json.dumps(transformed_payload, default=str),
-                    "destination_url": destination_url,
-                    "success": bool(success),
-                    "response_code": int(response_code) if response_code is not None else None,
-                    "response_body": response_body,
-                }
-            ],
+        row = transformed_row(
+            raw_event_id,
+            webhook_id,
+            transformed_payload,
+            destination_url,
+            success,
+            response_code,
+            response_body,
         )
-        return event_id
+        self.store.append_events("transformed_events", [row])
+        return row["id"]
 
     def log_filtered_out(
         self, raw_event_id: str, webhook_id: str, destination_url: str

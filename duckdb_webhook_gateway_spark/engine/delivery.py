@@ -8,18 +8,19 @@ the outcome recorded; failures are logged, never retried
 
 Two execution paths call :func:`deliver` (SURVEY §2A A10):
 
-- the synchronous per-event pipeline and small streaming batches POST from
-  a bounded DRIVER thread pool (``foreachBatch`` side effect);
-- large streaming batches ship delivery INTO Spark tasks — the audit
-  write's ``mapInArrow`` pass POSTs each partition's events executor-side
+- the per-event step ``Gateway.run_event`` POSTs inline, one event at a
+  time, from the driver.  ``Gateway.ingest``, the HTTP server's
+  background worker and the streaming per-event fallback (exotic shapes,
+  failed shape groups) all run it;
+- streaming shape groups ship delivery INTO Spark tasks — the audit
+  write's ``mapInArrow`` pass POSTs each partition's events
+  executor-side through a bounded in-task pool
   (``streaming/webhook_source.py``), so throughput scales with the
   cluster.  That path is at-least-once under task retry/speculation.
   If the session was launched with ``spark.speculation=true`` (Spark's
-  default is off) ``StreamingGateway`` warns and widens the driver-pool
-  threshold for the RESOLVABLE fallback path, but the shape-group
-  main path still POSTs executor-side: routing it through the driver
-  would collect transformed payloads driver-side, the anti-pattern the
-  round-6 design removed (see
+  default is off) ``StreamingGateway`` warns: routing these POSTs
+  through the driver would collect transformed payloads driver-side,
+  the anti-pattern the round-6 design removed (see
   ``test_no_payload_bearing_collect_in_micro_batch``).  Speculative
   duplicate POSTs on that path remain possible — run delivery workloads
   with speculation off.

@@ -22,7 +22,7 @@ from typing import Any, Optional
 
 from pyspark.sql import SparkSession
 
-from .audit import AuditLog
+from .audit import FILTERED_OUT_BODY, AuditLog
 from .catalog import WebhookCatalog, WebhookConfig
 from .delivery import DeliveryResult, deliver
 from .executors import execute_event
@@ -82,69 +82,54 @@ class Gateway:
     def process_event(
         self, webhook: dict[str, Any], raw_event_id: str, payload: dict | list
     ) -> ProcessOutcome:
-        """Filter -> transform -> deliver -> audit.  Any processing error is
-        caught and audited with ``success=False`` and ``Error: <msg>`` as
-        the response body (reference: src/app.py:1226-1244)."""
-        try:
-            return self._process_event_inner(webhook, raw_event_id, payload)
-        except Exception as e:
-            tid = self.audit.log_transformed_event(
-                raw_event_id=raw_event_id,
-                webhook_id=webhook["id"],
-                transformed_payload={},
-                destination_url=webhook["destination_url"],
-                success=False,
-                response_code=None,
-                response_body=f"Error: {e}",
-            )
-            return ProcessOutcome(
-                raw_event_id=raw_event_id,
-                webhook_id=webhook["id"],
-                filtered_out=False,
-                transformed={},
-                delivery=None,
-                transformed_event_id=tid,
-            )
+        """Filter -> transform -> deliver -> audit: :meth:`run_event` plus
+        one write of its ``transformed_events`` row."""
+        outcome, row = self.run_event(webhook, raw_event_id, payload)
+        outcome.transformed_event_id = self.audit.log_transformed_event(**row)
+        return outcome
 
-    def _process_event_inner(
+    def run_event(
         self, webhook: dict[str, Any], raw_event_id: str, payload: dict | list
-    ) -> ProcessOutcome:
-        webhook_id = webhook["id"]
-        self.udfs.load_webhook_udfs(webhook_id)
+    ) -> tuple[ProcessOutcome, dict[str, Any]]:
+        """The per-event step, without the audit write: load the webhook's
+        UDFs, gate and transform the payload, deliver the result inline.
+        Returns the outcome and the ``transformed_events`` row fields
+        (the arguments of ``audit.transformed_row``).  Any processing error
+        becomes ``success=False`` with ``Error: <msg>`` as the response
+        body (reference: src/app.py:1226-1244).
 
-        passed, transformed = execute_event(
-            self.spark,
-            webhook.get("filter_query"),
-            webhook["transform_query"],
-            payload,
-        )
-        if not passed:
-            tid = self.audit.log_filtered_out(
-                raw_event_id, webhook_id, webhook["destination_url"]
+        Both front ends run this step: :meth:`process_event` writes its row
+        at once; the streaming fallback collects the rows of a micro-batch
+        into its one audit append.  Delivery is serial, one POST per call,
+        as in the reference's background task."""
+        webhook_id = webhook["id"]
+        outcome = ProcessOutcome(raw_event_id, webhook_id, filtered_out=False)
+        try:
+            self.udfs.load_webhook_udfs(webhook_id)
+            passed, transformed = execute_event(
+                self.spark,
+                webhook.get("filter_query"),
+                webhook["transform_query"],
+                payload,
             )
-            return ProcessOutcome(
-                raw_event_id=raw_event_id,
-                webhook_id=webhook_id,
-                filtered_out=True,
-                transformed_event_id=tid,
-            )
-        result = deliver(webhook["destination_url"], transformed)
-        tid = self.audit.log_transformed_event(
+            if passed:
+                outcome.delivery = result = deliver(
+                    webhook["destination_url"], transformed
+                )
+                outcome.transformed = transformed
+            else:
+                outcome.filtered_out = True
+                result = DeliveryResult(False, None, FILTERED_OUT_BODY)
+        except Exception as e:
+            result = DeliveryResult(False, None, f"Error: {e}")
+        return outcome, dict(
             raw_event_id=raw_event_id,
             webhook_id=webhook_id,
-            transformed_payload=transformed,
+            transformed_payload=outcome.transformed,
             destination_url=webhook["destination_url"],
             success=result.success,
             response_code=result.response_code,
             response_body=result.response_body,
-        )
-        return ProcessOutcome(
-            raw_event_id=raw_event_id,
-            webhook_id=webhook_id,
-            filtered_out=False,
-            transformed=transformed,
-            delivery=result,
-            transformed_event_id=tid,
         )
 
     # -- analytics surfaces (SURVEY §2A A15/A16/A17) -----------------------

@@ -13,7 +13,6 @@ This is the single place that contract lives for the Spark engine.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import math
 from typing import Any
 
@@ -49,9 +48,8 @@ def rows_to_dicts(df: DataFrame) -> list[dict[str, Any]]:
     return [{c: _plain(row[c]) for c in cols} for row in df.collect()]
 
 
-def shape_result(df: DataFrame) -> dict[str, Any]:
+def shape_rows(rows: list[dict[str, Any]]) -> dict[str, Any]:
     """Apply the 0/1/N-row shaping contract (reference: src/app.py:488-504)."""
-    rows = rows_to_dicts(df)
     if not rows:
         return {}
     if len(rows) == 1:
@@ -59,7 +57,6 @@ def shape_result(df: DataFrame) -> dict[str, Any]:
     return {"results": rows}
 
 
-def dumps(result: dict[str, Any]) -> str:
-    """JSON-serialize a shaped result the way the reference stores
-    ``transformed_payload`` (reference: src/app.py:423)."""
-    return json.dumps(result, default=str)
+def shape_result(df: DataFrame) -> dict[str, Any]:
+    """Collect a transform result and shape it with :func:`shape_rows`."""
+    return shape_rows(rows_to_dicts(df))

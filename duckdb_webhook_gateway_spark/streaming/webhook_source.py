@@ -7,16 +7,18 @@ BASELINE.json north star) is a streaming source feeding micro-batches:
 
   ingest -> append JSON line to a landing directory ->
   readStream (file source, exactly-once tracking via checkpoint) ->
-  foreachBatch: per-event filter/transform (identical executors and
-  result-shaping as the synchronous path) + ONE batched audit append
-  per micro-batch per table.
+  foreachBatch: one distributed filter/transform/deliver plan per
+  (webhook, payload schema) group, the exotic tail through the
+  synchronous path's own per-event step (``Gateway.run_event``) + ONE
+  batched audit append per micro-batch per table.
 
 Per-event semantics (§2C quirks: filter on raw payload, 0/1/N shaping,
 "Filtered out by filter_query" audit rows, error rows) are preserved
-exactly — the batch boundary only amortizes storage writes and delivery
-fan-out.  At scale, the landing dir becomes cloud storage / Kafka and the
-same foreachBatch body runs unchanged; watermarks are unnecessary because
-the reference assigns times at ingest (processing time), not event time.
+exactly — the batch boundary only amortizes storage writes and the
+shape groups' delivery fan-out.  At scale, the landing dir becomes cloud
+storage / Kafka and the same foreachBatch body runs unchanged; watermarks
+are unnecessary because the reference assigns times at ingest
+(processing time), not event time.
 """
 
 from __future__ import annotations
@@ -27,18 +29,12 @@ import sys
 import uuid
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..engine.audit import FILTERED_OUT_BODY
-from ..engine.delivery import deliver
-from ..engine.executors import (
-    embed_ids,
-    execute_event,
-    payload_schema,
-    transform_events,
-)
+from ..engine.audit import transformed_row
+from ..engine.executors import embed_ids, payload_schema, transform_events
 from ..engine.pipeline import Gateway
 from ..engine.store import new_id, now_utc
 
@@ -101,30 +97,29 @@ def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
     ``transform_events``, role 0 = group member), repartitioned by
     ``__corr_id`` so every event's rows live in exactly one task.  Per
     event: no role-1 row -> the filtered-out audit row (constant body, no
-    POST); otherwise apply the 0/1/N shaping contract to its rows, in
-    their array order, with the SAME ``_plain`` conversions the driver
-    path used (Arrow ``to_pylist`` hands back exact Python values — ints
-    stay ints, SQL NULL stays None, no pandas NaN coercion), POST the
-    body through a bounded in-task thread pool, and emit the finished
-    ``transformed_events`` audit row.  The ``timestamp`` column ships as
-    an ISO string; the store's distributed writer casts it to
+    POST); otherwise shape its rows, in their array order, with the
+    synchronous path's ``shape_rows`` and ``_plain`` conversions (Arrow
+    ``to_pylist`` hands back exact Python values — ints stay ints, SQL
+    NULL stays None, no pandas NaN coercion), POST the body through a
+    bounded in-task thread pool, and emit the ``transformed_events``
+    audit row built by ``transformed_row``.  The ``timestamp`` column
+    ships as an ISO string; the store's distributed writer casts it to
     TimestampType.
     """
 
     def shape_deliver(batches):
         import pyarrow as pa
 
+        from duckdb_webhook_gateway_spark.engine.audit import (
+            FILTERED_OUT_BODY as _FILTERED,
+            transformed_row as _row,
+        )
         from duckdb_webhook_gateway_spark.engine.delivery import (
             deliver as _deliver,
         )
-        from duckdb_webhook_gateway_spark.engine.results import _plain
-        from duckdb_webhook_gateway_spark.engine.store import (
-            new_id as _nid,
-            now_utc as _now,
-        )
-
-        from duckdb_webhook_gateway_spark.engine.audit import (
-            FILTERED_OUT_BODY as _FILTERED,
+        from duckdb_webhook_gateway_spark.engine.results import (
+            _plain,
+            shape_rows,
         )
 
         shaped: dict[str, list] = {}
@@ -141,16 +136,7 @@ def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
                     ]
         filtered = [cid for cid in order if cid not in shaped]
         order = [cid for cid in order if cid in shaped]
-        bodies = []
-        for cid in order:
-            rows = shaped[cid]
-            if not rows:
-                transformed: dict[str, Any] = {}
-            elif len(rows) == 1:
-                transformed = rows[0]
-            else:
-                transformed = {"results": rows}
-            bodies.append(transformed)
+        bodies = [shape_rows(shaped[cid]) for cid in order]
         # bounded in-task delivery pool: one slow destination stalls only
         # its own slot, and partition count stays modest (task overhead,
         # output-file count) without serializing POST latency
@@ -166,35 +152,22 @@ def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
         else:
             outcomes = []
         out_rows = [
-            {
-                "id": _nid(),
-                "raw_event_id": cid,
-                "webhook_id": webhook_id,
-                "timestamp": _now().isoformat(),
-                "transformed_payload": json.dumps({}),
-                "destination_url": dest_url,
-                "success": False,
-                "response_code": None,
-                "response_body": _FILTERED,
-            }
+            _row(cid, webhook_id, {}, dest_url, False, None, _FILTERED)
             for cid in filtered
-        ]
-        for cid, transformed, res in zip(order, bodies, outcomes):
-            out_rows.append(
-                {
-                    "id": _nid(),
-                    "raw_event_id": cid,
-                    "webhook_id": webhook_id,
-                    "timestamp": _now().isoformat(),
-                    "transformed_payload": json.dumps(
-                        transformed, default=str
-                    ),
-                    "destination_url": dest_url,
-                    "success": res.success,
-                    "response_code": res.response_code,
-                    "response_body": res.response_body,
-                }
+        ] + [
+            _row(
+                cid,
+                webhook_id,
+                transformed,
+                dest_url,
+                res.success,
+                res.response_code,
+                res.response_body,
             )
+            for cid, transformed, res in zip(order, bodies, outcomes)
+        ]
+        for r in out_rows:
+            r["timestamp"] = r["timestamp"].isoformat()
         if out_rows:
             # explicit schema: an all-NULL response_code partition must
             # still type as int32, never infer as null
@@ -226,6 +199,35 @@ def _warn(batch_id: int, webhook_id: str, what: str, e: Exception) -> None:
         f"({type(e).__name__}: {msg})",
         file=sys.stderr,
     )
+
+
+def _envelope(event_id: str, path: str, payload: Any) -> str:
+    """One landing-file line (``ENVELOPE_SCHEMA``), stamped now."""
+    return json.dumps(
+        {
+            "event_id": event_id,
+            "source_path": path,
+            "payload_json": json.dumps(payload),
+            "ingest_ts": now_utc().isoformat(),
+        }
+    )
+
+
+def _write_landing(landing_dir: str, lines: list[str]) -> None:
+    """Land envelope lines as ONE json-lines file.
+
+    The staging file is DOT-PREFIXED so the file stream source (which
+    skips only hidden '.'/'_' names, not extensions) can never list a
+    half-written file — a plain '<id>.json.tmp' in the watched dir could
+    be read partially before the rename AND re-read under its final name
+    after it, duplicating or corrupting events.  The same-directory
+    rename stays atomic, so a file is visible whole or not at all.
+    """
+    fkey = uuid.uuid4().hex
+    tmp = os.path.join(landing_dir, f".{fkey}.json.tmp")
+    with open(tmp, "w") as f:
+        f.write("\n".join(lines) + "\n")
+    os.rename(tmp, os.path.join(landing_dir, f"{fkey}.json"))
 
 
 class _GroupCommit:
@@ -333,11 +335,7 @@ class _GroupCommit:
                 self._buf_gen += 1
             flush_err: Optional[Exception] = None
             try:
-                fkey = uuid.uuid4().hex
-                tmp = os.path.join(self.dir, f".{fkey}.json.tmp")
-                with open(tmp, "w") as f:
-                    f.write("\n".join(lines) + "\n")
-                os.rename(tmp, os.path.join(self.dir, f"{fkey}.json"))
+                _write_landing(self.dir, lines)
             except Exception as e:  # noqa: BLE001 - propagated to waiters
                 flush_err = e
             with self._flushed:
@@ -356,14 +354,6 @@ class StreamingGateway:
     src/app.py:1111).  ``run_available`` / ``start`` consume the landing
     dir with Structured Streaming and process micro-batches.
     """
-
-    # Delivery fan-out: up to this many events, a bounded driver thread
-    # pool (no job overhead; 32 concurrent sockets cover micro-batch
-    # rates — measured faster than a Spark job up to ~2k events).  Above
-    # it, deliveries ship to executors as a mapInPandas job so the
-    # fan-out scales with the cluster instead of one driver's sockets.
-    DISTRIBUTED_DELIVERY_THRESHOLD = 2048
-    DRIVER_POOL_SIZE = 32
 
     def __init__(
         self,
@@ -388,24 +378,22 @@ class StreamingGateway:
             if group_commit_window is not None
             else None
         )
-        # NOTE: concurrent ingest() calls need no lock — every event
+        # NOTE: concurrent ingest() calls need no lock — every call
         # writes its own uniquely-named file (uuid) via an atomic rename.
         # Ledger of fully-committed micro-batch ids; lives inside the
         # checkpoint dir so wiping the checkpoint (which replays the
         # stream from scratch) resets it too.
         self._ledger_path = os.path.join(self.checkpoint_dir, "audit_ledger")
-        # Delivery POSTs run inside Spark tasks (the audit write's
-        # mapInArrow pass and the large-batch _resolve_deliveries job); a
-        # speculative duplicate task double-POSTs with NO failure having
-        # occurred.  spark.speculation is a launch-time core conf (not
-        # runtime-settable), so the engine can't just turn it off here —
-        # it warns loudly and keeps the driver pool for the RESOLVABLE
-        # fallback path only.  The shape-group main path still
-        # POSTs executor-side even under speculation: routing it through
-        # the driver would collect transformed payloads driver-side — the
-        # anti-pattern the round-6 design removed (pinned by
-        # test_no_payload_bearing_collect_in_micro_batch).  Spark's
-        # default is false.
+        # The shape-group path POSTs inside Spark tasks (the audit write's
+        # mapInArrow pass), so a speculative duplicate task double-POSTs
+        # with NO failure having occurred.  spark.speculation is a
+        # launch-time core conf (not runtime-settable), so the engine
+        # can't just turn it off here — it warns.  Routing those POSTs
+        # through the driver would collect transformed payloads
+        # driver-side, the anti-pattern pinned by
+        # test_no_payload_bearing_collect_in_micro_batch.  The per-event
+        # fallback already POSTs on the driver (Gateway.run_event).
+        # Spark's default is false.
         if (
             self.spark.sparkContext.getConf()
             .get("spark.speculation", "false")
@@ -417,14 +405,13 @@ class StreamingGateway:
             warnings.warn(
                 "spark.speculation=true: speculative tasks can duplicate "
                 "webhook delivery POSTs (at-least-once widens beyond "
-                "failure-retry). The fallback delivery path is routed to "
-                "the driver pool, but the shape-group audit path "
-                "still POSTs executor-side. Launch the streaming session "
-                "with speculation off for delivery workloads.",
+                "failure-retry). Shape-group events POST from executor "
+                "tasks; only the per-event fallback POSTs from the "
+                "driver. Launch the streaming session with speculation "
+                "off for delivery workloads.",
                 RuntimeWarning,
                 stacklevel=2,
             )
-            self.DISTRIBUTED_DELIVERY_THRESHOLD = 2**63 - 1
 
     # -- producer side (driver/HTTP shell) --------------------------------
     def ingest(self, path: str, payload: dict | list) -> str:
@@ -432,33 +419,14 @@ class StreamingGateway:
 
         File-per-batch-of-one keeps the file-source contract (files are
         immutable once visible); a fronting HTTP shell may buffer several
-        events per file for higher ingest rates.
-
-        The staging file is DOT-PREFIXED so the file stream source (which
-        skips only hidden '.'/'_' names, not extensions) can never list a
-        half-written envelope — a plain '<id>.json.tmp' in the watched
-        dir could be read partially before the rename AND re-read under
-        its final name after it, duplicating or corrupting the event.
-        The same-directory rename stays atomic.
+        events per file for higher ingest rates.  With group commit on,
+        concurrent calls share a file (see ``_GroupCommit``).
         """
+        if self._group_commit is None:
+            return self.ingest_many(path, [payload])[0]
         event_id = new_id()
-        line = json.dumps(
-            {
-                "event_id": event_id,
-                "source_path": path,
-                "payload_json": json.dumps(payload),
-                "ingest_ts": now_utc().isoformat(),
-            }
-        )
-        if self._group_commit is not None:
-            # returns after the shared file is durable (rename done)
-            self._group_commit.submit(line)
-            return event_id
-        fname = os.path.join(self.landing_dir, f"{event_id}.json")
-        tmp = os.path.join(self.landing_dir, f".{event_id}.json.tmp")
-        with open(tmp, "w") as f:
-            f.write(line + "\n")
-        os.rename(tmp, fname)
+        # returns after the shared file is durable (rename done)
+        self._group_commit.submit(_envelope(event_id, path, payload))
         return event_id
 
     def ingest_many(self, path: str, payloads: list) -> list[str]:
@@ -469,32 +437,15 @@ class StreamingGateway:
         events land at ~200 ev/s as single files but ~550 ev/s as 10
         json-lines files on the same host.  Producers that already hold a
         batch (bulk APIs, replayers, buffering HTTP shells) should use
-        this; acks carry the same durability (the rename happens before
-        return).  Same dot-prefixed staging + atomic same-dir rename as
-        :meth:`ingest`.
+        this; acks carry the same durability (``_write_landing`` renames
+        the file in before return).
         """
-        ids, lines = [], []
-        for payload in payloads:
-            event_id = new_id()
-            ids.append(event_id)
-            lines.append(
-                json.dumps(
-                    {
-                        "event_id": event_id,
-                        "source_path": path,
-                        "payload_json": json.dumps(payload),
-                        "ingest_ts": now_utc().isoformat(),
-                    }
-                )
+        ids = [new_id() for _ in payloads]
+        if ids:
+            _write_landing(
+                self.landing_dir,
+                [_envelope(i, path, p) for i, p in zip(ids, payloads)],
             )
-        if not lines:
-            return ids
-        fkey = uuid.uuid4().hex
-        fname = os.path.join(self.landing_dir, f"{fkey}.json")
-        tmp = os.path.join(self.landing_dir, f".{fkey}.json.tmp")
-        with open(tmp, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        os.rename(tmp, fname)
         return ids
 
     # -- consumer side ----------------------------------------------------
@@ -546,9 +497,10 @@ class StreamingGateway:
         order) are preserved exactly.  Events without a group key
         (untypeable or non-dict shapes, empty structs, ``__corr_id``
         collisions, malformed JSON) and groups whose run fails analysis
-        take the per-event path — only THOSE groups' payloads are
-        collected, the bounded exotic tail.  A group failure is reported
-        on stderr.
+        or run time take the per-event path (``_per_event_rows``): the
+        step ``Gateway.ingest`` runs, one event at a time with inline
+        delivery.  Only THOSE groups' payloads are collected, the
+        bounded exotic tail.  A group failure is reported on stderr.
 
         Exactly-once AUDIT semantics on retry: a batch that already
         committed (ledger) is skipped outright, and the audit appends use
@@ -556,8 +508,8 @@ class StreamingGateway:
         promote (distributed writes) so a partially-failed batch
         overwrites its own partial output when Structured Streaming
         replays it.  Delivery is at-least-once: a crash-replay re-POSTs
-        the recovered batch, and — with delivery running inside the audit
-        write's tasks since round 6 — a task-level retry re-POSTs that
+        the recovered batch, and — with shape-group delivery running
+        inside the audit write's tasks — a task-level retry re-POSTs that
         task's partition, and ``spark.speculation`` (off by default; the
         constructor warns if a deployment enables it) would duplicate
         POSTs even without a failure.  Both are the same contract the
@@ -616,10 +568,10 @@ class StreamingGateway:
                 webhook = webhooks[path]
                 if webhook is None:
                     continue  # unmatched path: raw-logged only (reference 404s pre-log)
-                self.gateway.udfs.load_webhook_udfs(webhook["id"])
                 if fp is None:
                     fallback.append((path, fp))
                     continue
+                self.gateway.udfs.load_webhook_udfs(webhook["id"])
                 grp = tagged.filter(
                     (F.col("source_path") == path) & (F.col("fp") == fp)
                 )
@@ -646,7 +598,6 @@ class StreamingGateway:
                 )
 
             try:
-                self._resolve_deliveries(tr_rows)
                 # Distributed results first: executing this write runs the
                 # shape+deliver+audit pass on the executors — the shaped
                 # bodies never exist on the driver.  Union keeps it ONE
@@ -682,7 +633,6 @@ class StreamingGateway:
                         # Delivery stays at-least-once: tasks that POSTed
                         # before the failure re-POST on the re-run.
                         store.drop_batch_files("transformed_events", file_key)
-                        late_rows: list[dict[str, Any]] = []
                         for gi, (path, fp, audit_df) in enumerate(
                             result_groups
                         ):
@@ -700,13 +650,11 @@ class StreamingGateway:
                                     "processing its events one by one",
                                     ge,
                                 )
-                                late_rows.extend(
+                                tr_rows.extend(
                                     self._per_event_rows(
                                         webhooks[path], path, fp, tagged
                                     )
                                 )
-                        self._resolve_deliveries(late_rows)
-                        tr_rows.extend(late_rows)
                 if tr_rows:
                     store.append_events(
                         "transformed_events", tr_rows, file_key=file_key
@@ -758,11 +706,13 @@ class StreamingGateway:
     ) -> list[dict[str, Any]]:
         """Per-event fallback for one (path, fp) group: collects THAT
         group's payloads (bounded to the group) and runs each event through
-        the single-event executor, which converts any failure into an
-        "Error: ..." audit row instead of an exception.  Used for exotic
-        shapes (fp=None), analysis-time transform failures, and groups
-        whose distributed run failed at runtime."""
-        self.gateway.udfs.load_webhook_udfs(webhook["id"])
+        ``Gateway.run_event``, the step ``Gateway.ingest`` runs: filter,
+        transform, inline delivery, and an "Error: ..." row instead of an
+        exception.  Used for exotic shapes (fp=None), analysis-time
+        transform failures, and groups whose distributed run failed at
+        run time.  The POSTs are serial, as in ``Gateway.ingest`` and the
+        HTTP server's single background worker; the rows join the batch's
+        one audit append."""
         cond = F.col("source_path") == path
         cond = cond & (
             F.col("fp").isNull() if fp is None else F.col("fp") == fp
@@ -774,94 +724,21 @@ class StreamingGateway:
             try:
                 payload = json.loads(r["payload_json"])
             except Exception:
-                rows.append(
-                    {
-                        "id": new_id(),
-                        "raw_event_id": r["event_id"],
-                        "webhook_id": webhook["id"],
-                        "timestamp": now_utc(),
-                        "destination_url": webhook["destination_url"],
-                        "transformed_payload": json.dumps({}),
-                        "success": False,
-                        "response_code": None,
-                        "response_body": "Error: malformed payload JSON",
-                    }
+                fields = dict(
+                    raw_event_id=r["event_id"],
+                    webhook_id=webhook["id"],
+                    transformed_payload={},
+                    destination_url=webhook["destination_url"],
+                    success=False,
+                    response_code=None,
+                    response_body="Error: malformed payload JSON",
                 )
-                continue
-            rows.append(self._process_one(webhook, r["event_id"], payload))
+            else:
+                _, fields = self.gateway.run_event(
+                    webhook, r["event_id"], payload
+                )
+            rows.append(transformed_row(**fields))
         return rows
-
-    # -- delivery fan-out --------------------------------------------------
-    def _resolve_deliveries(self, tr_rows: list[dict[str, Any]]) -> None:
-        """Resolve rows carrying a deferred ``_deliver`` marker in place.
-
-        Delivery used to run serially inside the processing loop — one slow
-        destination stalled the whole micro-batch.  Small batches fan out
-        on a bounded driver thread pool; large ones ship to executors via
-        ``mapInPandas`` (each task POSTs its partition's events), so
-        delivery throughput scales with the cluster, not one driver.
-        Results are recorded per row exactly as the serial path did.
-        """
-        pending = [
-            (i, row.pop("_deliver")) for i, row in enumerate(tr_rows) if "_deliver" in row
-        ]
-        if not pending:
-            return
-        if len(pending) < self.DISTRIBUTED_DELIVERY_THRESHOLD:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(self.DRIVER_POOL_SIZE, len(pending))
-            ) as pool:
-                outcomes = list(
-                    pool.map(lambda p: deliver(p[1][0], p[1][1]), pending)
-                )
-        else:
-            delivery_rows = [
-                (i, url, json.dumps(payload, default=str))
-                for i, (url, payload) in pending
-            ]
-            nparts = max(1, min(64, len(delivery_rows) // 8))
-            from ..plans.localrel import local_df
-
-            sdf = local_df(
-                self.spark, delivery_rows, "idx INT, url STRING, payload STRING"
-            ).repartition(nparts)
-
-            def _post(batches):
-                import pandas as pd
-
-                from duckdb_webhook_gateway_spark.engine.delivery import deliver as _d
-
-                for pdf in batches:
-                    out = []
-                    for idx, url, payload in pdf.itertuples(index=False):
-                        r = _d(url, json.loads(payload))
-                        out.append((int(idx), r.success, r.response_code, r.response_body))
-                    yield pd.DataFrame(
-                        out, columns=["idx", "success", "response_code", "response_body"]
-                    )
-
-            from ..engine.delivery import DeliveryResult
-
-            got = {
-                r["idx"]: DeliveryResult(
-                    bool(r["success"]),
-                    None if r["response_code"] is None else int(r["response_code"]),
-                    r["response_body"],
-                )
-                for r in sdf.mapInPandas(
-                    _post,
-                    "idx INT, success BOOLEAN, response_code INT, response_body STRING",
-                ).collect()
-            }
-            outcomes = [got[i] for i, _ in pending]
-        for (i, _), outcome in zip(pending, outcomes):
-            tr_rows[i].update(
-                success=outcome.success,
-                response_code=outcome.response_code,
-                response_body=outcome.response_body,
-            )
 
     # -- shape-group processing -------------------------------------------
     def _process_group_distributed(
@@ -945,53 +822,6 @@ class StreamingGateway:
             "destination_url string, success boolean, "
             "response_code int, response_body string",
         )
-
-    def _process_one(
-        self, webhook: dict[str, Any], raw_event_id: str, payload: dict | list
-    ) -> dict[str, Any]:
-        """One event through filter/transform/deliver; returns the audit row
-        (same semantics as Gateway.process_event, write deferred)."""
-        spark = self.spark
-        self.gateway.udfs.load_webhook_udfs(webhook["id"])
-        base = {
-            "id": new_id(),
-            "raw_event_id": raw_event_id,
-            "webhook_id": webhook["id"],
-            "timestamp": now_utc(),
-            "destination_url": webhook["destination_url"],
-        }
-        try:
-            passed, transformed = execute_event(
-                spark,
-                webhook.get("filter_query"),
-                webhook["transform_query"],
-                payload,
-            )
-            if not passed:
-                return {
-                    **base,
-                    "transformed_payload": json.dumps({}),
-                    "success": False,
-                    "response_code": None,
-                    "response_body": FILTERED_OUT_BODY,
-                }
-            return {
-                **base,
-                "transformed_payload": json.dumps(transformed, default=str),
-                # resolved by _resolve_deliveries (parallel fan-out)
-                "success": False,
-                "response_code": None,
-                "response_body": None,
-                "_deliver": (webhook["destination_url"], transformed),
-            }
-        except Exception as e:
-            return {
-                **base,
-                "transformed_payload": json.dumps({}),
-                "success": False,
-                "response_code": None,
-                "response_body": f"Error: {e}",
-            }
 
     def run_available(self) -> None:
         """Drain everything currently in the landing dir (one shot)."""

@@ -85,6 +85,54 @@ def test_delivery_failure_audited(gateway, spark):
     assert "Error" in tr[0].response_body
 
 
+def test_streamed_batch_delivers_to_live_receiver(gateway, spark, receiver):
+    """A streamed micro-batch delivers for real on both of its paths:
+    shape-group events POST from the audit write's tasks, an event with a
+    top-level ``__corr_id`` takes the per-event fallback and POSTs from
+    the driver.  A fallback event for a dead destination is audited as a
+    failure, not retried."""
+    from duckdb_webhook_gateway_spark.streaming import StreamingGateway
+
+    gateway.register_webhook(
+        WebhookConfig(
+            source_path="/live",
+            destination_url=f"http://127.0.0.1:{receiver}/hook",
+            transform_query="SELECT a, a + 1 AS b FROM {{payload}}",
+        )
+    )
+    gateway.register_webhook(
+        WebhookConfig(
+            source_path="/gone",
+            destination_url="http://127.0.0.1:1/hook",
+            transform_query="SELECT a FROM {{payload}}",
+        )
+    )
+    sg = StreamingGateway(gateway)
+    live = sg.ingest_many(
+        "/live", [{"a": 1}, {"a": 2}, {"a": 3, "__corr_id": "x"}]
+    )
+    dead = sg.ingest("/gone", {"a": 4, "__corr_id": "y"})
+    sg.run_available()
+
+    assert sorted(_Receiver.received, key=lambda b: b["a"]) == [
+        {"a": 1, "b": 2},
+        {"a": 2, "b": 3},
+        {"a": 3, "b": 4},
+    ]
+    tr = {
+        r.raw_event_id: r
+        for r in spark.sql("SELECT * FROM transformed_events").collect()
+    }
+    assert set(tr) == {*live, dead}
+    for i in live:
+        assert tr[i].success is True
+        assert tr[i].response_code == 200
+        assert json.loads(tr[i].response_body) == {"status": "received"}
+    assert tr[dead].success is False
+    assert tr[dead].response_code is None
+    assert tr[dead].response_body.startswith("Error")
+
+
 def test_per_event_latency_warm(gateway, spark, receiver):
     """Warm per-event ingest stays interactive because the payload relation
     is a JVM-local Arrow table: the filter probe and transform never pay a

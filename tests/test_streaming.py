@@ -638,22 +638,6 @@ def test_batch_replay_is_idempotent(gateway, spark):
     assert spark.sql("SELECT count(*) AS n FROM raw_events").first().n == n_raw
 
 
-def test_distributed_delivery_fanout(gateway, spark):
-    """Above the threshold, deliveries run as a Spark job on executors;
-    outcomes must land in the audit rows exactly like the serial path."""
-    _register(gateway)
-    sg = StreamingGateway(gateway)
-    sg.DISTRIBUTED_DELIVERY_THRESHOLD = 1  # force the mapInPandas path
-    for i in range(4):
-        sg.ingest("/stream", {"kind": f"k{i}", "value": i})
-    sg.run_available()
-    rows = spark.sql(
-        "SELECT success, response_code FROM transformed_events"
-    ).collect()
-    assert len(rows) == 4
-    assert all(r.success and r.response_code == 200 for r in rows)
-
-
 def test_stream_static_enrichment_join(gateway, spark):
     """Envelopes enriched against a broadcast static dimension — the
     stream-static join pattern (no state store, map-side probe)."""
