@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -129,11 +130,16 @@ class GatewayHTTPServer:
             try:
                 with self._drain_lock:
                     self.streaming_gateway.run_available()
-            except Exception:
+            except Exception as e:
                 # Drain again next tick.  Checkpoint + the batch ledger /
                 # batch-keyed audit files keep audit rows exactly-once on
                 # replay; delivery is at-least-once across a crash-replay.
-                pass
+                msg = (str(e).strip().splitlines() or [""])[0]
+                print(
+                    f"WARNING: streaming drain failed "
+                    f"({type(e).__name__}: {msg})",
+                    file=sys.stderr,
+                )
 
     def start(self) -> "GatewayHTTPServer":
         self._thread = threading.Thread(target=self.httpd.serve_forever, daemon=True)
@@ -475,13 +481,17 @@ def _make_handler(srv: GatewayHTTPServer):
             # src/app.py:1068-1073)
             return self._ingest(path)
 
-        def _register(self):
+        def _webhook_config(self) -> Optional[WebhookConfig]:
+            """The body as a ``WebhookConfig``; on a bad body, sends the
+            400 (not a JSON object) or 422 (invalid config) and returns
+            None."""
             try:
                 data = self._json_dict()
             except ValueError:
-                return self._send(400, {"detail": "Invalid JSON"})
+                self._send(400, {"detail": "Invalid JSON"})
+                return None
             try:
-                cfg = WebhookConfig(
+                return WebhookConfig(
                     source_path=data.get("source_path", ""),
                     destination_url=data.get("destination_url", ""),
                     transform_query=data.get("transform_query", ""),
@@ -489,7 +499,13 @@ def _make_handler(srv: GatewayHTTPServer):
                     owner=data.get("owner"),
                 )
             except ValidationError as e:
-                return self._send(422, {"detail": str(e)})
+                self._send(422, {"detail": str(e)})
+                return None
+
+        def _register(self):
+            cfg = self._webhook_config()
+            if cfg is None:
+                return
             rec = gw.register_webhook(cfg)
             # reference wire shape (src/app.py:950, pinned by its tests):
             # {"status": "success", "webhook": {...}} — flat record kept
@@ -660,19 +676,9 @@ def _make_handler(srv: GatewayHTTPServer):
             m = re.fullmatch(r"/webhook/([^/]+)", urlparse(self.path).path)
             if not m:
                 return self._send(404, {"detail": "Not found"})
-            try:
-                data = self._json_dict()
-                cfg = WebhookConfig(
-                    source_path=data.get("source_path", ""),
-                    destination_url=data.get("destination_url", ""),
-                    transform_query=data.get("transform_query", ""),
-                    filter_query=data.get("filter_query"),
-                    owner=data.get("owner"),
-                )
-            except ValidationError as e:
-                return self._send(422, {"detail": str(e)})
-            except ValueError:
-                return self._send(400, {"detail": "Invalid JSON"})
+            cfg = self._webhook_config()
+            if cfg is None:
+                return
             row = gw.catalog.update(m.group(1), cfg)
             if row is None:
                 return self._send(404, {"detail": "Webhook not found"})

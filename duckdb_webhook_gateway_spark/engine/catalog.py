@@ -16,10 +16,10 @@ Reference semantics reproduced (SURVEY §2A A14, §2C):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass
 from typing import Any, Optional
 
-from .store import TableStore, new_id, now_utc
+from .store import TableStore, now_utc
 
 INACTIVE_PREFIX = "/inactive_"
 
@@ -68,32 +68,9 @@ class WebhookCatalog:
 
     # -- register / upsert (reference: src/app.py:253-317) ----------------
     def register(self, config: WebhookConfig) -> dict[str, Any]:
-        def _upsert(rows: list[dict[str, Any]]) -> dict[str, Any]:
-            ts = now_utc()
-            for row in rows:
-                if row["source_path"] == config.source_path:
-                    row.update(
-                        destination_url=config.destination_url,
-                        transform_query=config.transform_query,
-                        filter_query=config.filter_query,
-                        owner=config.owner,
-                        updated_at=ts,
-                    )
-                    return dict(row)
-            row = {
-                "id": new_id(),
-                "source_path": config.source_path,
-                "destination_url": config.destination_url,
-                "transform_query": config.transform_query,
-                "filter_query": config.filter_query,
-                "owner": config.owner,
-                "created_at": ts,
-                "updated_at": ts,
-            }
-            rows.append(row)
-            return dict(row)
-
-        return self.store.mutate_catalog("webhooks", _upsert)
+        values = asdict(config)
+        key = {"source_path": values.pop("source_path")}
+        return self.store.upsert_catalog_row("webhooks", key, values)
 
     # -- lookups (exact, case-sensitive; reference: src/app.py:319-348) ---
     def get_by_path(self, path: str) -> Optional[dict[str, Any]]:
@@ -116,14 +93,7 @@ class WebhookCatalog:
         def _update(rows: list[dict[str, Any]]):
             for row in rows:
                 if row["id"] == webhook_id:
-                    row.update(
-                        source_path=config.source_path,
-                        destination_url=config.destination_url,
-                        transform_query=config.transform_query,
-                        filter_query=config.filter_query,
-                        owner=config.owner,
-                        updated_at=now_utc(),
-                    )
+                    row.update(asdict(config), updated_at=now_utc())
                     return dict(row)
             return None
 

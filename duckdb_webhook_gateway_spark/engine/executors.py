@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import rewrite_dialect
 from .results import shape_result
+from .store import arrow_type
 
 PAYLOAD_MACRO = "{{payload}}"
 _I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
@@ -91,28 +92,6 @@ def payload_schema(values: list):
     return None  # mixed/unsupported -> fall back
 
 
-def _arrow_type(dtype):
-    """Spark type (from ``payload_schema``) -> pyarrow type."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    if isinstance(dtype, T.LongType):
-        return pa.int64()
-    if isinstance(dtype, T.DoubleType):
-        return pa.float64()
-    if isinstance(dtype, T.BooleanType):
-        return pa.bool_()
-    if isinstance(dtype, T.StringType):
-        return pa.string()
-    if isinstance(dtype, T.StructType):
-        return pa.struct(
-            [pa.field(f.name, _arrow_type(f.dataType)) for f in dtype.fields]
-        )
-    if isinstance(dtype, T.ArrayType):
-        return pa.list_(_arrow_type(dtype.elementType))
-    raise TypeError(f"no arrow mapping for {dtype}")
-
-
 def payload_to_df(spark: SparkSession, payload: dict | list) -> DataFrame:
     """JSON payload -> DataFrame with inferred (possibly nested) schema.
 
@@ -152,7 +131,7 @@ def payload_to_df(spark: SparkSession, payload: dict | list) -> DataFrame:
                     records,
                     schema=pa.schema(
                         [
-                            pa.field(f.name, _arrow_type(f.dataType))
+                            pa.field(f.name, arrow_type(f.dataType))
                             for f in schema.fields
                         ]
                     ),

@@ -4,14 +4,17 @@ Order of operations (reference: src/app.py:1113-1244):
 
   1. catalog lookup by path (404 if absent — src/app.py:1089)
   2. log raw event, ack immediately (src/app.py:1101-1111)
-  3. load the webhook's stored UDFs (src/app.py:1148)
-  4. apply filter on the RAW payload (src/app.py:1152); rejected events get
+  3. apply filter on the RAW payload (src/app.py:1152); rejected events get
      an audit row with success=False / "Filtered out by filter_query"
      and processing stops (src/app.py:1159-1170)
-  5. execute transform (src/app.py:1173)
-  6. deliver over HTTP, 30 s timeout, mock for example.com/localhost
+  4. execute transform (src/app.py:1173)
+  5. deliver over HTTP, 30 s timeout, mock for example.com/localhost
      (src/app.py:1179-1213)
-  7. log transformed event with the delivery outcome (src/app.py:1217-1225)
+  6. log transformed event with the delivery outcome (src/app.py:1217-1225)
+
+The reference reloads the webhook's stored UDFs before step 3
+(src/app.py:1148); here they are session state, registered once when the
+store opens and at upload (engine/udfs.py).
 """
 
 from __future__ import annotations
@@ -91,8 +94,9 @@ class Gateway:
     def run_event(
         self, webhook: dict[str, Any], raw_event_id: str, payload: dict | list
     ) -> tuple[ProcessOutcome, dict[str, Any]]:
-        """The per-event step, without the audit write: load the webhook's
-        UDFs, gate and transform the payload, deliver the result inline.
+        """The per-event step, without the audit write: gate and transform
+        the payload, deliver the result inline.  Stored UDFs are already
+        registered (at store open and at upload).
         Returns the outcome and the ``transformed_events`` row fields
         (the arguments of ``audit.transformed_row``).  Any processing error
         becomes ``success=False`` with ``Error: <msg>`` as the response
@@ -105,7 +109,6 @@ class Gateway:
         webhook_id = webhook["id"]
         outcome = ProcessOutcome(raw_event_id, webhook_id, filtered_out=False)
         try:
-            self.udfs.load_webhook_udfs(webhook_id)
             passed, transformed = execute_event(
                 self.spark,
                 webhook.get("filter_query"),

@@ -2,9 +2,9 @@
 
 Reference: upload CSV/JSON -> DataFrame -> CTAS under a sanitized,
 namespaced table name ``ref_<webhook_id>_<name>``; re-upload replaces the
-table and updates metadata in place; rename drops the old table
-(src/app.py:581-671; name sanitization at src/app.py:606-607; extension
-dispatch at src/app.py:1013-1024).
+table and updates metadata in place (src/app.py:581-671; name
+sanitization at src/app.py:606-607; extension dispatch at
+src/app.py:1013-1024).
 
 Spark-first: reference tables are the classic broadcast-join dimension.
 They are persisted as single-file Parquet and registered as temp views;
@@ -18,13 +18,12 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 import sys
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from .store import TableStore, new_id, now_utc
+from .store import TableStore
 
 _SANITIZE_RE = re.compile(r"[^0-9a-zA-Z_]")
 
@@ -89,68 +88,11 @@ class ReferenceTableManager:
         # Replace-on-reupload (reference: DROP TABLE IF EXISTS + CTAS).
         df.coalesce(1).write.mode("overwrite").parquet(path)
         self.spark.read.parquet(path).createOrReplaceTempView(full_name)
-
-        def _upsert(rows: list[dict[str, Any]]) -> str:
-            ts = now_utc()
-            for row in rows:
-                if row["webhook_id"] == webhook_id and row["table_name"] == table_name:
-                    row.update(description=description, updated_at=ts)
-                    return row["id"]
-            rid = new_id()
-            rows.append(
-                {
-                    "id": rid,
-                    "webhook_id": webhook_id,
-                    "table_name": table_name,
-                    "description": description,
-                    "created_at": ts,
-                    "updated_at": ts,
-                }
-            )
-            return rid
-
-        return self.store.mutate_catalog("reference_tables", _upsert)
-
-    def rename(self, webhook_id: str, old_name: str, new_name: str) -> None:
-        """Rename drops the old physical table (reference: src/app.py:633-637)."""
-        old_full = ref_table_name(webhook_id, old_name)
-        if old_full == ref_table_name(webhook_id, new_name):
-            # names that SANITIZE identically ('a b' -> 'a.b'): the
-            # upload would overwrite the very path the lazy source df
-            # reads, then drop_physical would rmtree the fresh data —
-            # only the catalog row needs to change
-            ts = now_utc()
-
-            def _relabel(rows: list[dict[str, Any]]):
-                for r in rows:
-                    if (
-                        r["webhook_id"] == webhook_id
-                        and r["table_name"] == old_name
-                    ):
-                        r["table_name"] = new_name
-                        r["updated_at"] = ts
-
-            self.store.mutate_catalog("reference_tables", _relabel)
-            return
-        df = self.spark.table(old_full)
-        self.upload(webhook_id, new_name, df)
-        self.drop_physical(webhook_id, old_name)
-
-        def _rename(rows: list[dict[str, Any]]):
-            rows[:] = [
-                r
-                for r in rows
-                if not (r["webhook_id"] == webhook_id and r["table_name"] == old_name)
-            ]
-
-        self.store.mutate_catalog("reference_tables", _rename)
-
-    def drop_physical(self, webhook_id: str, table_name: str) -> None:
-        full_name = ref_table_name(webhook_id, table_name)
-        self.spark.catalog.dropTempView(full_name)
-        path = os.path.join(self.data_dir, full_name)
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
+        return self.store.upsert_catalog_row(
+            "reference_tables",
+            {"webhook_id": webhook_id, "table_name": table_name},
+            {"description": description},
+        )["id"]
 
     def list(self, webhook_id: Optional[str] = None) -> list[dict[str, Any]]:
         rows = self.store.catalog_rows("reference_tables")

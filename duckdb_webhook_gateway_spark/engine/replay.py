@@ -79,7 +79,6 @@ def replay_events(
         from .catalog import ValidationError
 
         raise ValidationError("transform_query must reference {{payload}}")
-    gateway.udfs.load_webhook_udfs(webhook["id"])
 
     spark = gateway.spark
     # per-call correlation key: uuid-suffixed so a payload key can never

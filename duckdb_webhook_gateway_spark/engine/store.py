@@ -116,6 +116,33 @@ def new_id() -> str:
     return str(uuid.uuid4())
 
 
+def arrow_type(dtype: T.DataType):
+    """Spark type -> pyarrow type, for the audit tables' driver-side
+    parquet writes and the payload relations of ``payload_schema``.
+    Timestamps are naive microseconds, as Spark writes them."""
+    import pyarrow as pa
+
+    if isinstance(dtype, T.LongType):
+        return pa.int64()
+    if isinstance(dtype, T.IntegerType):
+        return pa.int32()
+    if isinstance(dtype, T.DoubleType):
+        return pa.float64()
+    if isinstance(dtype, T.BooleanType):
+        return pa.bool_()
+    if isinstance(dtype, T.StringType):
+        return pa.string()
+    if isinstance(dtype, T.TimestampType):
+        return pa.timestamp("us")
+    if isinstance(dtype, T.StructType):
+        return pa.struct(
+            [pa.field(f.name, arrow_type(f.dataType)) for f in dtype.fields]
+        )
+    if isinstance(dtype, T.ArrayType):
+        return pa.list_(arrow_type(dtype.elementType))
+    raise TypeError(f"no arrow mapping for {dtype}")
+
+
 class TableStore:
     """Owns the 5 engine tables; registers them as Spark temp views.
 
@@ -226,6 +253,26 @@ class TableStore:
                 if pred(r):
                     return dict(r)
         return None
+
+    def upsert_catalog_row(
+        self, name: str, key: dict[str, Any], values: dict[str, Any]
+    ) -> dict[str, Any]:
+        """Update the row matching every ``key`` column with ``values``,
+        or insert one with a fresh ``id``; stamps ``updated_at`` (and
+        ``created_at`` on insert).  Returns a copy of the row."""
+
+        def _upsert(rows: list[dict[str, Any]]) -> dict[str, Any]:
+            ts = now_utc()
+            for row in rows:
+                if all(row[k] == v for k, v in key.items()):
+                    row.update(values, updated_at=ts)
+                    return dict(row)
+            row = {"id": new_id(), **key, **values}
+            row.update(created_at=ts, updated_at=ts)
+            rows.append(row)
+            return dict(row)
+
+        return self.mutate_catalog(name, _upsert)
 
     def mutate_catalog(self, name: str, fn) -> Any:
         """Read-modify-write a catalog table under the store lock.
@@ -534,19 +581,9 @@ class TableStore:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        arrow_fields = []
-        for f in SCHEMAS[name].fields:
-            t: pa.DataType
-            if isinstance(f.dataType, T.TimestampType):
-                t = pa.timestamp("us")
-            elif isinstance(f.dataType, T.BooleanType):
-                t = pa.bool_()
-            elif isinstance(f.dataType, T.IntegerType):
-                t = pa.int32()
-            else:
-                t = pa.string()
-            arrow_fields.append(pa.field(f.name, t))
-        schema = pa.schema(arrow_fields)
+        schema = pa.schema(
+            [(f.name, arrow_type(f.dataType)) for f in SCHEMAS[name].fields]
+        )
 
         by_date: dict[str, list[dict[str, Any]]] = {}
         for row in rows:

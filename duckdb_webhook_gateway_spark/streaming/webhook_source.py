@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 from ..engine.audit import transformed_row
 from ..engine.executors import embed_ids, payload_schema, transform_events
 from ..engine.pipeline import Gateway
-from ..engine.store import new_id, now_utc
+from ..engine.store import SCHEMAS, arrow_type, new_id, now_utc
 
 ENVELOPE_SCHEMA = T.StructType(
     [
@@ -89,6 +89,21 @@ def _group_key(payload: Any) -> Optional[str]:
     return schema.json()
 
 
+# ``transformed_events`` as the shape-group tasks emit it: the audit
+# schema with ``timestamp`` as an ISO string.
+_SHIPPED_TRANSFORMED = T.StructType(
+    [
+        T.StructField(
+            f.name,
+            T.StringType()
+            if isinstance(f.dataType, T.TimestampType)
+            else f.dataType,
+        )
+        for f in SCHEMAS["transformed_events"].fields
+    ]
+)
+
+
 def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
     """Executor-side shape + deliver + audit for one (webhook, shape) group.
 
@@ -106,10 +121,13 @@ def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
     ships as an ISO string; the store's distributed writer casts it to
     TimestampType.
     """
+    import pyarrow as pa
+
+    out_schema = pa.schema(
+        [(f.name, arrow_type(f.dataType)) for f in _SHIPPED_TRANSFORMED]
+    )
 
     def shape_deliver(batches):
-        import pyarrow as pa
-
         from duckdb_webhook_gateway_spark.engine.audit import (
             FILTERED_OUT_BODY as _FILTERED,
             transformed_row as _row,
@@ -171,22 +189,7 @@ def _make_shape_deliver(webhook_id: str, dest_url: str, out_cols: list):
         if out_rows:
             # explicit schema: an all-NULL response_code partition must
             # still type as int32, never infer as null
-            yield pa.RecordBatch.from_pylist(
-                out_rows,
-                schema=pa.schema(
-                    [
-                        ("id", pa.string()),
-                        ("raw_event_id", pa.string()),
-                        ("webhook_id", pa.string()),
-                        ("timestamp", pa.string()),
-                        ("transformed_payload", pa.string()),
-                        ("destination_url", pa.string()),
-                        ("success", pa.bool_()),
-                        ("response_code", pa.int32()),
-                        ("response_body", pa.string()),
-                    ]
-                ),
-            )
+            yield pa.RecordBatch.from_pylist(out_rows, schema=out_schema)
 
     return shape_deliver
 
@@ -501,6 +504,8 @@ class StreamingGateway:
         step ``Gateway.ingest`` runs, one event at a time with inline
         delivery.  Only THOSE groups' payloads are collected, the
         bounded exotic tail.  A group failure is reported on stderr.
+        The webhooks' stored UDFs are session state, registered when the
+        store opened or at upload, so no group reloads them.
 
         Exactly-once AUDIT semantics on retry: a batch that already
         committed (ledger) is skipped outright, and the audit appends use
@@ -571,7 +576,6 @@ class StreamingGateway:
                 if fp is None:
                     fallback.append((path, fp))
                     continue
-                self.gateway.udfs.load_webhook_udfs(webhook["id"])
                 grp = tagged.filter(
                     (F.col("source_path") == path) & (F.col("fp") == fp)
                 )
@@ -817,10 +821,7 @@ class StreamingGateway:
             _make_shape_deliver(
                 webhook["id"], webhook["destination_url"], out_cols
             ),
-            "id string, raw_event_id string, webhook_id string, "
-            "timestamp string, transformed_payload string, "
-            "destination_url string, success boolean, "
-            "response_code int, response_body string",
+            _SHIPPED_TRANSFORMED,
         )
 
     def run_available(self) -> None:

@@ -211,6 +211,34 @@ def test_streaming_mode_end_to_end(gateway, spark):
         srv.stop()
 
 
+def test_streaming_drain_failure_warns_and_retries(gateway, capfd):
+    """A failed drain prints one stderr warning and the next tick drains
+    again."""
+    import threading
+
+    srv = GatewayHTTPServer(gateway, streaming=True, drain_interval=0.05)
+    calls = []
+    retried = threading.Event()
+
+    def run_available():
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("landing dir gone\nsecond line")
+        retried.set()
+
+    srv.streaming_gateway.run_available = run_available
+    srv.start()
+    try:
+        assert retried.wait(60)
+    finally:
+        srv.stop()
+    err = capfd.readouterr().err
+    assert (
+        "WARNING: streaming drain failed (RuntimeError: landing dir gone)\n"
+        in err
+    )
+
+
 def _get_raw(srv, path, key=None):
     url = f"http://127.0.0.1:{srv.port}{path}"
     req = urllib.request.Request(url, method="GET")

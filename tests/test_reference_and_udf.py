@@ -225,7 +225,9 @@ def test_broken_stored_udf_warns_and_is_skipped(gateway, capfd):
 
 
 def test_udfs_loaded_before_processing(gateway, spark):
-    # reference: src/app.py:1148 (load_webhook_udfs on every run)
+    """A UDF registered after its webhook resolves on that webhook's next
+    ingest: registration puts it in the session (the reference instead
+    reloads stored UDFs before every run, src/app.py:1148)."""
     rec = gateway.register_webhook(
         WebhookConfig(
             source_path="/udf3",
@@ -250,27 +252,96 @@ def test_udfs_loaded_before_processing(gateway, spark):
     assert outcome.transformed == {"loud": "HEY!"}
 
 
-def test_vectorized_udf_registration(gateway, spark):
-    """vectorized=True registers the same scalar contract as an
-    Arrow-batched pandas UDF — identical results on a large relation,
-    and row-UDF reload semantics stay the reference default."""
-    from duckdb_webhook_gateway_spark.engine.udfs import udf_full_name
-
-    wid = "11111111-2222-3333-4444-555555555555"
-    gateway.udfs.register(
-        wid,
-        "triple",
-        "def triple(x: int) -> int:\n    return x * 3\n",
-        vectorized=True,
+def _udf_webhook(gw, path: str) -> str:
+    """A webhook whose transform calls its own stored ``shout`` UDF;
+    returns the UDF's session name."""
+    wid = gw.register_webhook(
+        WebhookConfig(path, "http://example.com/x", "SELECT * FROM {{payload}}")
+    )["id"]
+    gw.udfs.register(
+        wid, "shout", "def shout(x: str) -> str:\n    return x.upper() + '!'\n"
     )
-    name = udf_full_name(wid, "triple")
-    spark.range(1000).createOrReplaceTempView("vec_udf_in")
-    out = spark.sql(
-        f"SELECT sum({name}(CAST(id AS INT))) AS s FROM vec_udf_in"
-    ).first()
-    assert out.s == 3 * sum(range(1000))
-    # reload path re-registers from stored code (row-at-a-time default)
-    # and must still compute the same values
-    gateway.udfs.load_webhook_udfs(wid)
-    out2 = spark.sql(f"SELECT {name}(14) AS v").first()
-    assert out2.v == 42
+    name = udf_full_name(wid, "shout")
+    gw.register_webhook(
+        WebhookConfig(
+            path,
+            "http://example.com/x",
+            f"SELECT {name}(word) AS loud FROM {{{{payload}}}}",
+        )
+    )
+    return name
+
+
+def _adhoc(gw, path, name):
+    from duckdb_webhook_gateway_spark.engine import run_adhoc_query
+
+    return run_adhoc_query(gw.spark, f"SELECT {name}('hey') AS loud")["result"]
+
+
+def _ingest(gw, path, name):
+    return gw.ingest(path, {"word": "hey"}).transformed
+
+
+def _stream(gw, path, name):
+    import json
+
+    from duckdb_webhook_gateway_spark.streaming import StreamingGateway
+
+    sg = StreamingGateway(gw)
+    eid = sg.ingest(path, {"word": "hey"})
+    sg.run_available()
+    row = (
+        gw.spark.table("transformed_events")
+        .where(f"raw_event_id = '{eid}'")
+        .first()
+    )
+    return json.loads(row.transformed_payload)
+
+
+def _replay(gw, path, name):
+    return [r.loud for r in gw.replay(path).collect()]
+
+
+@pytest.mark.parametrize(
+    "use, want",
+    [
+        (_adhoc, [["HEY!"]]),
+        (_ingest, {"loud": "HEY!"}),
+        (_stream, {"loud": "HEY!"}),
+        (_replay, ["HEY!"]),
+    ],
+    ids=["run_adhoc_query", "ingest", "run_available", "replay"],
+)
+def test_stored_udf_registered_when_store_opens(spark, tmp_path, use, want):
+    """Opening a store registers its stored UDFs: after the session loses
+    a UDF (a fresh process), every front end resolves it again from the
+    re-opened Gateway, before any event of its webhook arrives."""
+    from duckdb_webhook_gateway_spark.engine import Gateway
+
+    workdir = str(tmp_path / "store")
+    gw = Gateway(spark, workdir=workdir)
+    name = _udf_webhook(gw, "/reopen")
+    if use is _replay:
+        gw.ingest("/reopen", {"word": "hey"})
+    spark.sql(f"DROP TEMPORARY FUNCTION {name}")
+    with pytest.raises(Exception, match="UNRESOLVED_ROUTINE"):
+        spark.sql(f"SELECT {name}('hey')").collect()
+    assert use(Gateway(spark, workdir=workdir), "/reopen", name) == want
+
+
+def test_ingest_registers_no_udf(gateway, monkeypatch):
+    """An ingest on a webhook with a stored UDF registers nothing: the
+    UDF entered the session at upload."""
+    from pyspark.sql.udf import UDFRegistration
+
+    _udf_webhook(gateway, "/no-reload")
+    calls = []
+    register = UDFRegistration.register
+    monkeypatch.setattr(
+        UDFRegistration,
+        "register",
+        lambda self, *a, **k: calls.append(a[0]) or register(self, *a, **k),
+    )
+    outcome = gateway.ingest("/no-reload", {"word": "hey"})
+    assert outcome.transformed == {"loud": "HEY!"}
+    assert calls == []

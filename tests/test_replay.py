@@ -120,9 +120,9 @@ def test_replay_lazy_no_action_until_collect(gateway, spark):
 
 
 def test_replay_loads_runtime_udfs(gateway, spark):
-    """Replay must re-register the webhook's stored Python UDFs (under
-    their namespaced udf_<id>_<fn> names) before running the transform —
-    same contract as the ingest path."""
+    """A replay transform resolves the webhook's stored Python UDFs under
+    their namespaced udf_<id>_<fn> names — they are session state, as on
+    the ingest path."""
     from duckdb_webhook_gateway_spark.engine.udfs import udf_full_name
 
     _register(gateway, "/r8", "SELECT word AS loud FROM {{payload}}")
