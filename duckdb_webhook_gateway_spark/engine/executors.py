@@ -4,18 +4,26 @@ Reference semantics reproduced here:
 
 - payload dict -> 1-row relation; payload list -> N-row relation
   (reference: src/app.py:448-458, 541-551)
-- ``{{payload}}`` macro substituted with a unique temp-view name
+- ``{{payload}}`` macro substituted with a unique relation name
   (reference: src/app.py:462; validation at src/app.py:64-69)
 - transform = run substituted SELECT, shape rows per the 0/1/N contract
   (reference: src/app.py:434-522)
 - filter = bare WHERE predicate evaluated as an existence gate; ``None`` or
   blank filter always passes (reference: src/app.py:524-579)
-- temp views are UUID-named and dropped in ``finally`` for isolation
-  (reference: src/app.py:448, 509-522, 541, 567-579)
+- the payload relation is UUID-named and private to the event (reference:
+  temp views dropped in ``finally``, src/app.py:448, 509-522, 541, 567-579)
 
-Spark-first notes: ``payload_schema`` walks the JSON driver-side with
-``spark.read.json``'s type rules, and the payload becomes an Arrow-backed
-``LocalTableScan``; so nested objects become ``StructType`` (dot access
+Spark-first notes: the payload is bound into the query text, not the
+session catalog.  Each event's query starts with one CTE,
+``WITH temp_payload_<uuid> AS (SELECT __r.* FROM VALUES
+(from_json('<record>', '<ddl>')), ... AS __v(__r))``, so the filter probe
+and the transform are one ``spark.sql`` call each and the catalog never
+changes per event.  Catalyst folds the inline table into a JVM
+``LocalTableScan``: a query over it runs without a job unless the
+transform itself needs one (a Python UDF, a join against a reference
+table).  ``payload_schema`` walks the JSON driver-side with
+``spark.read.json``'s type rules and is the one type authority: its type
+becomes the DDL, so nested objects become ``StructType`` (dot access
 ``nested.key1`` works natively — the reference relied on DuckDB's struct
 inference for the same, tests/test_event_processing.py:56-70) and arrays
 of objects become ``ArrayType(StructType)`` (stronger than the reference,
@@ -23,7 +31,8 @@ which documented array element access as broken,
 tests/test_event_processing.py:71).  Columns keep the payload's key order.
 Schema is inferred per event, never cached — two events on one path may
 differ in shape, exactly like the reference.  Shapes the walker cannot
-type fall back to ``spark.read.json``.
+type take ``spark.read.json``'s inferred schema into the same inline form
+(``from_json`` parses with the same rules, ``_corrupt_record`` included).
 
 The same walker types the streaming micro-batch's shape groups, and
 ``embed_ids`` + ``transform_events`` are the many-event form of
@@ -92,69 +101,119 @@ def payload_schema(values: list):
     return None  # mixed/unsupported -> fall back
 
 
-def payload_to_df(spark: SparkSession, payload: dict | list) -> DataFrame:
-    """JSON payload -> DataFrame with inferred (possibly nested) schema.
-
-    dict -> one row; list -> one row per element
-    (reference: src/app.py:451-454).
-
-    Fast path: the schema is inferred driver-side (pure Python walk of the
-    JSON — the same type rules spark.read.json applies) and the relation
-    is stood up as a pyarrow Table, which ``createDataFrame`` turns into
-    a JVM-side **LocalTableScan**.  That matters twice over: no inference
-    job, and — unlike the pickled-row ``createDataFrame(rows, schema)``
-    this replaces, whose ``Scan ExistingRDD`` re-ran a Python worker
-    round-trip on EVERY query over the view (~0.5 s per filter probe) —
-    every subsequent query over the payload view evaluates entirely in
-    the JVM, usually driver-local without launching a job.  Column order
-    follows dict insertion order — matching the reference's pandas
-    construction (src/app.py:451-454) where read.json would sort keys.
-    Shapes the walker can't type uniformly (mixed scalar kinds,
-    int64-overflowing literals) fall back to spark.read.json.
-    """
+def _records(payload: dict | list) -> list:
+    """dict -> one record; list -> one record per element
+    (reference: src/app.py:451-454)."""
     if isinstance(payload, dict):
-        records = [payload]
-    elif isinstance(payload, list):
-        records = payload
-    else:
-        raise TypeError(f"payload must be dict or list, got {type(payload).__name__}")
+        return [payload]
+    if isinstance(payload, list):
+        return payload
+    raise TypeError(f"payload must be dict or list, got {type(payload).__name__}")
 
-    if records and all(isinstance(r, dict) for r in records):
-        schema = payload_schema(records)
-        from pyspark.sql import types as T
 
-        if isinstance(schema, T.StructType) and len(schema.fields) > 0:
-            try:
-                import pyarrow as pa
-
-                tbl = pa.Table.from_pylist(
-                    records,
-                    schema=pa.schema(
-                        [
-                            pa.field(f.name, arrow_type(f.dataType))
-                            for f in schema.fields
-                        ]
-                    ),
-                )
-                return spark.createDataFrame(tbl)
-            except Exception:
-                pass  # fall back to authoritative inference
+def _read_json(spark: SparkSession, records: list) -> DataFrame:
     # One tiny partition: a per-event relation must not fan out across the
     # cluster; inference + scan happen on a single task.
     rdd = spark.sparkContext.parallelize([json.dumps(r) for r in records], 1)
     return spark.read.json(rdd)
 
 
-def _register_temp_payload(
-    spark: SparkSession, payload: dict | list, prefix: str
-) -> str:
-    name = f"{prefix}_{uuid.uuid4().hex}"
-    payload_to_df(spark, payload).createOrReplaceTempView(name)
-    return name
+def payload_to_df(spark: SparkSession, payload: dict | list) -> DataFrame:
+    """JSON payload -> DataFrame with inferred (possibly nested) schema,
+    for callers that want the payload as a DataFrame; the executors bind
+    it into their query text instead (``_bind_payload``).
+
+    Fast path: the schema is ``payload_schema``'s and the relation is
+    stood up as a pyarrow Table, which ``createDataFrame`` turns into a
+    JVM-side ``LocalTableScan`` (no inference job, and no Python worker
+    on later queries, unlike a pickled-row ``createDataFrame``).  Column
+    order follows dict insertion order, as in the reference's pandas
+    construction (src/app.py:451-454).  Shapes the walker can't type, and
+    values Arrow cannot convert to the walker's type, go through
+    ``spark.read.json``.
+    """
+    records = _records(payload)
+    if records and all(isinstance(r, dict) for r in records):
+        schema = payload_schema(records)
+        if schema is not None and len(schema.fields) > 0:
+            import pyarrow as pa
+
+            try:
+                tbl = pa.Table.from_pylist(
+                    records,
+                    schema=pa.schema(
+                        [pa.field(f.name, arrow_type(f.dataType)) for f in schema.fields]
+                    ),
+                )
+            except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+                pass  # fall back to authoritative inference
+            else:
+                return spark.createDataFrame(tbl)
+    return _read_json(spark, records)
+
+
+def _sql_string(text: str) -> str:
+    """``text`` as a Spark SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _ddl(dt) -> str:
+    """A Spark type as DDL, field names backtick-quoted (``simpleString``
+    leaves them bare, which breaks on ``.``, spaces and backticks)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        fields = (
+            "`" + f.name.replace("`", "``") + "`:" + _ddl(f.dataType) for f in dt.fields
+        )
+        return f"struct<{','.join(fields)}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_ddl(dt.elementType)}>"
+    return dt.simpleString()
+
+
+def _bind_payload(spark: SparkSession, payload: dict | list) -> tuple[str, str]:
+    """Bind a payload for one query: ``(name, with_clause)``, a unique
+    relation name and the ``WITH name AS (...)`` clause that a query over
+    ``name`` starts with.  The relation is an inline table of one
+    ``from_json`` per record, typed by ``payload_schema``, or by
+    ``spark.read.json``'s inferred schema where the walker cannot type the
+    records (one inference job).  An empty list is the zero-column
+    relation ``spark.read.json`` gives it, with no rows."""
+    from pyspark.sql import types as T
+
+    records = _records(payload)
+    if not records:
+        schema = T.StructType([])
+    elif all(isinstance(r, dict) for r in records):
+        schema = payload_schema(records)
+    else:
+        schema = None
+    if schema is None:
+        schema = _read_json(spark, records).schema
+    ddl = _sql_string(_ddl(schema))
+    rows = ", ".join(
+        f"(from_json({_sql_string(json.dumps(r))}, {ddl}))" for r in records or [{}]
+    )
+    empty = "" if records else " WHERE false"
+    name = f"temp_payload_{uuid.uuid4().hex}"
+    return name, f"WITH {name} AS (SELECT __r.* FROM VALUES {rows} AS __v(__r){empty}) "
+
+
+def _blank(filter_query: str | None) -> bool:
+    return filter_query is None or not str(filter_query).strip()
+
+
+def _passes(spark: SparkSession, name: str, with_clause: str, filter_query: str) -> bool:
+    """The filter's existence probe over a bound payload: does any record
+    satisfy the predicate?  ``isEmpty`` is one JVM call, and it stops at
+    the first qualifying row."""
+    probe = f"{with_clause}(SELECT 1 AS hit FROM {name} WHERE {filter_query}\n)"
+    return not spark.sql(probe).isEmpty()
 
 
 def substitute_macro(transform_query: str, view_name: str) -> str:
-    """``{{payload}}`` -> temp view name (reference: src/app.py:462), plus
+    """``{{payload}}`` -> relation name (reference: src/app.py:462), plus
     DuckDB-dialect rewrites (json_extract -> get_json_object)."""
     return rewrite_dialect(transform_query.replace(PAYLOAD_MACRO, view_name))
 
@@ -205,11 +264,7 @@ def transform_events(
     plan, so the caller may drop it once nothing caches it.
     """
     cols = ", ".join(f"`{c}`" for c in spark.table(view).columns if c != corr)
-    gate = (
-        f"WHERE {filter_query}"
-        if filter_query is not None and str(filter_query).strip()
-        else ""
-    )
+    gate = "" if _blank(filter_query) else f"WHERE {filter_query}"
     ev = f"ev_{uuid.uuid4().hex[:12]}"  # no payload column can shadow it
     inner = f"(SELECT {cols} FROM {view} WHERE {corr} = {ev}.{corr})"
     return spark.sql(
@@ -234,28 +289,24 @@ def execute_event(
     transform_query: str,
     payload: dict | list,
 ) -> tuple[bool, dict[str, Any]]:
-    """Fused filter + transform over ONE payload materialization.
+    """Fused filter + transform over ONE payload binding.
 
     The reference registers separate temp views for filter and transform
-    (src/app.py:448, 541) — unobservable implementation detail; sharing a
-    single view halves the per-event Spark jobs (payload inference runs
-    once).  Semantics identical: filter gates on the raw payload first,
-    blank/None filter passes, 0/1/N shaping applies to the transform.
+    (src/app.py:448, 541) — unobservable implementation detail; here both
+    queries carry the same inline payload relation (``_bind_payload``) and
+    nothing enters the session catalog.  Semantics identical: filter gates
+    on the raw payload first, blank/None filter passes, 0/1/N shaping
+    applies to the transform.  The transform is wrapped in parentheses
+    after the CTE, so its own ``WITH``, ``ORDER BY``/``LIMIT``, set
+    operations and comments stay valid; trailing ``;`` are dropped.
 
     Returns (passed_filter, shaped_result); result is ``{}`` when gated.
     """
-    view = _register_temp_payload(spark, payload, "temp_payload")
-    try:
-        if filter_query is not None and str(filter_query).strip():
-            probe = spark.sql(
-                f"SELECT 1 AS hit FROM {view} WHERE {filter_query} LIMIT 1"
-            )
-            if not probe.take(1):
-                return False, {}
-        df = spark.sql(substitute_macro(transform_query, view))
-        return True, shape_result(df)
-    finally:
-        spark.catalog.dropTempView(view)
+    name, with_clause = _bind_payload(spark, payload)
+    if not _blank(filter_query) and not _passes(spark, name, with_clause, filter_query):
+        return False, {}
+    query = substitute_macro(transform_query, name).rstrip().rstrip(";")
+    return True, shape_result(spark.sql(f"{with_clause}({query}\n)"))
 
 
 def apply_filter(
@@ -265,15 +316,10 @@ def apply_filter(
 
     ``None``/blank predicate always passes (reference: src/app.py:537-538).
     The reference runs ``SELECT COUNT(*) FROM tmp WHERE <pred>`` and checks
-    ``> 0`` (src/app.py:555-560); an existence probe (``LIMIT 1``) is
-    semantically identical and stops at the first qualifying row instead of
-    counting them all — the version that survives a wide payload relation.
+    ``> 0`` (src/app.py:555-560); the existence probe ``execute_event``
+    runs is semantically identical and stops at the first qualifying row
+    instead of counting them all.
     """
-    if filter_query is None or not str(filter_query).strip():
+    if _blank(filter_query):
         return True
-    view = _register_temp_payload(spark, payload, "temp_filter")
-    try:
-        probe = spark.sql(f"SELECT 1 AS hit FROM {view} WHERE {filter_query} LIMIT 1")
-        return len(probe.take(1)) > 0
-    finally:
-        spark.catalog.dropTempView(view)
+    return _passes(spark, *_bind_payload(spark, payload), filter_query)

@@ -3,6 +3,9 @@ randomized inputs against an independent pure-Python mirror of the math.
 The reference's test pyramid has no property layer (SURVEY.md §5); this
 one exists because hash/set operators have exactly the kind of edge cases
 (1-token docs, identical docs, all-distinct docs) example tests miss.
+The payload-binding property checks the per-event executors' inline
+payload relation against the independent temp-view form over random
+payload shapes.
 
 Examples are kept few and batched (one Spark action per example) — Spark
 job latency, not case count, dominates runtime here.
@@ -473,3 +476,92 @@ def test_winnow_detection_guarantee(spark, host, planted, offset):
     for r in winnow_fingerprints(_docs_df(spark, [a, b])).collect():
         fps[r.doc_id].add(r.fp_hash)
     assert fps[0] & fps[1], (a, b)
+
+
+# -- payload binding ----------------------------------------------------------
+
+_key = st.text(alphabet=st.sampled_from(list("ab.` _é")), min_size=1, max_size=4)
+_str = st.text(alphabet=st.sampled_from(list("ab'\"\\\n é☃")), max_size=6)
+_i64 = st.integers(-(2**63), 2**63 - 1)
+_KINDS = {
+    "long": _i64,
+    "double": st.floats(allow_nan=False, allow_infinity=False, width=32),
+    "int_float": st.one_of(st.integers(-1000, 1000), st.floats(-1e6, 1e6, width=32)),
+    "string": _str,
+    "bool": st.booleans(),
+    "null": st.none(),
+    "struct": st.fixed_dictionaries({"x": _i64, "y": _str, "z": st.fixed_dictionaries({"w": _str})}),
+    "struct_array": st.lists(st.fixed_dictionaries({"id": _i64, "s": _str}), max_size=3),
+    # Shapes payload_schema cannot type: spark.read.json infers the schema.
+    "mixed": st.one_of(st.integers(-5, 5), _str, st.booleans()),
+    "beyond_i64": st.integers(2**63, 2**70),
+}
+
+
+@st.composite
+def _payloads(draw):
+    """A dict, or a list of 0-4 records, over one drawn shape: every
+    record has the key ``k``, its position (so ORDER BY k has no ties),
+    plus the shape's keys, each value of its key's kind or null."""
+    keys = draw(st.lists(_key, unique=True, max_size=4))
+    kinds = [draw(st.sampled_from(sorted(_KINDS))) for _ in keys]
+    record = st.fixed_dictionaries(
+        {"k": st.just(0), **{k: st.one_of(st.none(), _KINDS[c]) for k, c in zip(keys, kinds)}}
+    )
+    if draw(st.booleans()):
+        return draw(record)
+    return [{**r, "k": i} for i, r in enumerate(draw(st.lists(record, max_size=4)))]
+
+
+_PARITY_TRANSFORMS = (
+    "SELECT * FROM {{payload}}",
+    "WITH t AS (SELECT * FROM {{payload}}) SELECT * FROM t",
+    "SELECT * FROM {{payload}} ORDER BY k DESC LIMIT 2",
+    "SELECT a.*, b.k AS k2 FROM {{payload}} a JOIN {{payload}} b ON a.k = b.k",
+    "SELECT k FROM {{payload}} UNION ALL SELECT k + 10 FROM {{payload}}",
+    "SELECT count(*) AS n FROM {{payload}};",
+    "SELECT * FROM {{payload}} -- trailing comment",
+    "-- leading comment\nSELECT * FROM {{payload}}",
+)
+
+
+def _via_view(spark, filter_query, transform, payload):
+    """The filter probe and transform over a ``payload_to_df`` temp view."""
+    import uuid
+
+    from duckdb_webhook_gateway_spark.engine.executors import payload_to_df, substitute_macro
+    from duckdb_webhook_gateway_spark.engine.results import shape_result
+
+    view = f"parity_{uuid.uuid4().hex}"
+    payload_to_df(spark, payload).createOrReplaceTempView(view)
+    try:
+        if filter_query and not spark.sql(f"SELECT 1 FROM {view} WHERE {filter_query}").take(1):
+            return False, {}
+        return True, shape_result(spark.sql(substitute_macro(transform, view).rstrip(";")))
+    finally:
+        spark.catalog.dropTempView(view)
+
+
+def _outcome(run):
+    try:
+        return run()
+    except Exception as e:  # both bindings must fail alike
+        return type(e).__name__
+
+
+@given(payload=_payloads(), filter_query=st.sampled_from([None, "k >= 1", "k > 5"]))
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_inline_payload_binding_matches_view(spark, payload, filter_query):
+    """``execute_event`` binds the payload into its query text (a
+    ``from_json`` inline table); a ``payload_to_df`` temp view (Arrow, or
+    ``spark.read.json``) is the independent form of the same relation.
+    Both give the same gate and the same shaped result for every
+    transform, and no event leaves a view in the catalog."""
+    from duckdb_webhook_gateway_spark.engine.executors import execute_event
+
+    before = {t.name for t in spark.catalog.listTables()}
+    for transform in _PARITY_TRANSFORMS:
+        got = _outcome(lambda: execute_event(spark, filter_query, transform, payload))
+        want = _outcome(lambda: _via_view(spark, filter_query, transform, payload))
+        assert got == want, (transform, payload)
+    assert {t.name for t in spark.catalog.listTables()} == before

@@ -5,6 +5,7 @@ in particular is load-bearing for the events table)."""
 from __future__ import annotations
 
 import os
+import stat
 import subprocess
 import sys
 import tempfile
@@ -63,6 +64,20 @@ def test_worker_path_keeps_caller_entries():
     assert session_conf({})["spark.python.daemon.module"] == (
         "duckdb_webhook_gateway_spark.pyworker"
     )
+
+
+def test_unix_socket_channel_defaults():
+    """The Unix-socket worker channel is a default a caller can turn off;
+    the private socket directory is set for local masters only (it would
+    not exist on a cluster's executor hosts) and a caller's wins."""
+    uds, uds_dir = "spark.python.unix.domain.socket.enabled", "spark.python.unix.domain.socket.dir"
+    conf = session_conf({})
+    assert conf[uds] == "true"
+    assert conf[uds_dir].startswith("/tmp/")
+    assert stat.S_IMODE(os.stat(conf[uds_dir]).st_mode) == 0o700
+    assert uds_dir not in session_conf({uds: "false"})
+    assert uds_dir not in session_conf({}, "spark://host:7077")
+    assert session_conf({uds_dir: "/run/spark"})[uds_dir] == "/run/spark"
 
 
 def test_python_workers_keep_zip_importers(spark):
@@ -145,3 +160,64 @@ def test_engine_runs_from_any_cwd_without_pythonpath(tmp_path):
         env=env,
     )
     assert "ANY_CWD_OK" in out.stdout, out.stderr[-3000:]
+
+
+_LONG_TMPDIR_SCRIPT = r"""
+import os, stat, sys
+sys.path.insert(0, sys.argv[1])
+from duckdb_webhook_gateway_spark import get_spark
+from duckdb_webhook_gateway_spark.engine import Gateway, WebhookConfig
+from duckdb_webhook_gateway_spark.engine.udfs import udf_full_name
+
+tmp = os.environ["TMPDIR"]
+spark = get_spark("long-tmpdir", **{
+    "spark.sql.warehouse.dir": sys.argv[2] + "/warehouse",
+    "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=" + tmp,
+})
+conf = spark.sparkContext.getConf()
+jvm_tmp = spark.sparkContext._jvm.java.lang.System.getProperty("java.io.tmpdir")
+assert jvm_tmp == tmp, jvm_tmp
+assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+sock_dir = conf.get("spark.python.unix.domain.socket.dir")
+assert stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700, oct(os.stat(sock_dir).st_mode)
+
+gw = Gateway(spark, workdir=sys.argv[2] + "/store")
+def config(transform):
+    return WebhookConfig(source_path="/enrich", destination_url="http://example.com/x",
+                         transform_query=transform)
+rec = gw.register_webhook(config("SELECT 1 AS one FROM {{payload}}"))
+gw.udfs.register(rec["id"], "tier", "def tier(n: int) -> str:\n    return 'gold' if n > 10 else 'basic'\n")
+name = udf_full_name(rec["id"], "tier")
+gw.catalog.update(rec["id"], config(f"SELECT user, {name}(orders) AS tier FROM {{{{payload}}}}"))
+out = gw.ingest("/enrich", {"user": "u1", "orders": 12})
+assert out.transformed == {"user": "u1", "tier": "gold"}, out.transformed
+print("SOCKET_DIR", sock_dir)
+print("LONG_TMPDIR_OK")
+"""
+
+
+def test_python_workers_use_private_unix_socket_under_long_tmpdir(tmp_path):
+    """Python workers reach the JVM over a Unix domain socket in a short,
+    private (0700) directory, also when ``TMPDIR`` and ``java.io.tmpdir``
+    are long paths: Spark's default socket directory is
+    ``java.io.tmpdir``, and a socket path past ``sun_path``'s 107 bytes
+    fails session start with ``AF_UNIX path too long``.  A stored UDF
+    runs in a Python worker, so one enrichment event exercises the
+    channel; the directory is gone once the process exits."""
+    long_tmp = tmp_path / ("t" * 60) / ("u" * 30)
+    long_tmp.mkdir(parents=True)
+    assert len(str(long_tmp)) >= 90
+    env = {**os.environ, "TMPDIR": str(long_tmp)}
+    out = subprocess.run(
+        [sys.executable, "-c", _LONG_TMPDIR_SCRIPT, _REPO, str(tmp_path)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert "LONG_TMPDIR_OK" in out.stdout, out.stderr[-3000:]
+    sock_dir = next(
+        line.split(" ", 1)[1] for line in out.stdout.splitlines() if line.startswith("SOCKET_DIR ")
+    )
+    assert len(sock_dir) + len("/.00000000-0000-0000-0000-000000000000.sock") <= 107
+    assert not os.path.exists(sock_dir)
