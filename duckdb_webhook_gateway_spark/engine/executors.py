@@ -15,22 +15,25 @@ Reference semantics reproduced here:
 
 Spark-first notes: the payload is bound into the query text, not the
 session catalog.  Each event's query starts with one CTE,
-``WITH temp_payload_<uuid> AS (SELECT __r.* FROM VALUES
-(from_json('<record>', '<ddl>')), ... AS __v(__r))``, so the filter probe
-and the transform are one ``spark.sql`` call each and the catalog never
-changes per event.  Catalyst folds the inline table into a JVM
-``LocalTableScan``: a query over it runs without a job unless the
-transform itself needs one (a Python UDF, a join against a reference
-table).  ``payload_schema`` walks the JSON driver-side with
-``spark.read.json``'s type rules and is the one type authority: its type
-becomes the DDL, so nested objects become ``StructType`` (dot access
-``nested.key1`` works natively — the reference relied on DuckDB's struct
-inference for the same, tests/test_event_processing.py:56-70) and arrays
-of objects become ``ArrayType(StructType)`` (stronger than the reference,
-which documented array element access as broken,
-tests/test_event_processing.py:71).  Columns keep the payload's key order.
-Schema is inferred per event, never cached — two events on one path may
-differ in shape, exactly like the reference.  Shapes the walker cannot
+``WITH temp_payload_<uuid> AS (SELECT __r.* FROM (SELECT from_json(__j,
+'<ddl>') AS __r FROM VALUES ('<record>'), ... AS __v(__j)))``, so the
+filter probe and the transform are one ``spark.sql`` call each and the
+catalog never changes per event.  Every ``$`` of the payload is written as
+``\\u0024`` (``_sql_string``): Spark substitutes ``${...}`` in the SQL
+text, string literals included, before it parses.  Catalyst folds the
+inline table into a JVM ``LocalTableScan``: a query over it runs without
+a job unless the transform itself needs one (a Python UDF, a join
+against a reference table).  ``payload_schema`` walks the JSON
+driver-side with ``spark.read.json``'s type rules and is the one type
+authority: its type becomes the DDL, so nested objects become
+``StructType`` (dot access ``nested.key1`` works natively — the reference
+relied on DuckDB's struct inference for the same,
+tests/test_event_processing.py:56-70) and arrays of objects become
+``ArrayType(StructType)`` (stronger than the reference, which documented
+array element access as broken, tests/test_event_processing.py:71).
+Columns keep the payload's key order.  Schema is inferred per event,
+never cached — two events on one path may differ in shape, exactly like
+the reference.  Shapes the walker cannot
 type take ``spark.read.json``'s inferred schema into the same inline form
 (``from_json`` parses with the same rules, ``_corrupt_record`` included).
 
@@ -42,6 +45,7 @@ filter + transform that both those groups and batch replay run.
 from __future__ import annotations
 
 import json
+import re
 import uuid
 from typing import Any
 
@@ -153,8 +157,16 @@ def payload_to_df(spark: SparkSession, payload: dict | list) -> DataFrame:
 
 
 def _sql_string(text: str) -> str:
-    """``text`` as a Spark SQL string literal."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """``text`` as a Spark SQL string literal.  ``$`` is written as the
+    escape ``\\u0024``: Spark rewrites ``${...}`` anywhere in the SQL
+    text, string literals included, before it parses (with environment
+    variables, JVM properties or session conf), so payload bytes must not
+    reach that pass."""
+    return (
+        "'"
+        + text.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+        + "'"
+    )
 
 
 def _ddl(dt) -> str:
@@ -175,8 +187,8 @@ def _ddl(dt) -> str:
 def _bind_payload(spark: SparkSession, payload: dict | list) -> tuple[str, str]:
     """Bind a payload for one query: ``(name, with_clause)``, a unique
     relation name and the ``WITH name AS (...)`` clause that a query over
-    ``name`` starts with.  The relation is an inline table of one
-    ``from_json`` per record, typed by ``payload_schema``, or by
+    ``name`` starts with.  The relation is an inline table of the records'
+    JSON, parsed by one ``from_json`` typed by ``payload_schema``, or by
     ``spark.read.json``'s inferred schema where the walker cannot type the
     records (one inference job).  An empty list is the zero-column
     relation ``spark.read.json`` gives it, with no rows."""
@@ -191,13 +203,33 @@ def _bind_payload(spark: SparkSession, payload: dict | list) -> tuple[str, str]:
         schema = None
     if schema is None:
         schema = _read_json(spark, records).schema
-    ddl = _sql_string(_ddl(schema))
-    rows = ", ".join(
-        f"(from_json({_sql_string(json.dumps(r))}, {ddl}))" for r in records or [{}]
-    )
+    rows = ", ".join(f"({_sql_string(json.dumps(r))})" for r in records or [{}])
     empty = "" if records else " WHERE false"
     name = f"temp_payload_{uuid.uuid4().hex}"
-    return name, f"WITH {name} AS (SELECT __r.* FROM VALUES {rows} AS __v(__r){empty}) "
+    return name, (
+        f"WITH {name} AS (SELECT __r.* FROM (SELECT from_json(__j, "
+        f"{_sql_string(_ddl(schema))}) AS __r FROM VALUES {rows} AS __v(__j)){empty}) "
+    )
+
+
+# One token of Spark SQL: a quoted string or identifier, a comment, or any
+# other run of characters.  ``_statement_body`` needs no finer split.
+_TOKEN = re.compile(
+    r"""'(?:\\.|[^'\\])*'?|"(?:\\.|[^"\\])*"?|`[^`]*`?"""
+    r"""|--[^\n]*|/\*.*?\*/|(?P<blank>[\s;]+)|[^'"`\s;/-]+|.""",
+    re.S,
+)
+
+
+def _statement_body(sql: str) -> str:
+    """``sql`` without what Spark's single-statement grammar allows after
+    the statement: ``;``, comments and blanks.  A transform runs inside
+    parentheses, where those would not parse."""
+    end = 0
+    for m in _TOKEN.finditer(sql):
+        if not (m.group("blank") or m.group().startswith(("--", "/*"))):
+            end = m.end()
+    return sql[:end]
 
 
 def _blank(filter_query: str | None) -> bool:
@@ -298,14 +330,15 @@ def execute_event(
     on the raw payload first, blank/None filter passes, 0/1/N shaping
     applies to the transform.  The transform is wrapped in parentheses
     after the CTE, so its own ``WITH``, ``ORDER BY``/``LIMIT``, set
-    operations and comments stay valid; trailing ``;`` are dropped.
+    operations and comments stay valid; a trailing ``;`` and the comments
+    after it are dropped (``_statement_body``).
 
     Returns (passed_filter, shaped_result); result is ``{}`` when gated.
     """
     name, with_clause = _bind_payload(spark, payload)
     if not _blank(filter_query) and not _passes(spark, name, with_clause, filter_query):
         return False, {}
-    query = substitute_macro(transform_query, name).rstrip().rstrip(";")
+    query = _statement_body(substitute_macro(transform_query, name))
     return True, shape_result(spark.sql(f"{with_clause}({query}\n)"))
 
 

@@ -135,15 +135,16 @@ def test_streamed_batch_delivers_to_live_receiver(gateway, spark, receiver):
 
 def test_per_event_latency_warm(gateway, spark, receiver):
     """Warm per-event ingest stays interactive because the payload relation
-    is a JVM-local Arrow table: the filter probe and transform never pay a
+    is a JVM-local inline table: the filter probe and transform never pay a
     Python-RDD worker round trip.  Two guards, split by what each can
     actually detect on this shared host:
 
-    - Structural (the real pin, load-immune): the payload relation for the
-      exact ingest shape plans as LocalTableScan with no ``Scan
-      ExistingRDD``.  The pickled-row regression this test exists for puts
-      a Python worker round trip into every query over the view (~0.75 s
-      median warm ingest when it was last measured).
+    - Structural (the real pin, load-immune): the payload binding
+      ``execute_event`` runs (``_bind_payload``) plans as LocalTableScan
+      with no ``Scan ExistingRDD``, for a payload the walker types and for
+      one only ``spark.read.json`` can type.  A binding over a pickled-row
+      or JSON RDD puts a Python worker round trip into every query over it
+      (~0.75 s median warm ingest when it was last measured).
     - Wall-clock smoke bound (median of 9 <= 2.0 s): a tight fixed bar
       cannot separate the healthy path under this host's documented 2-3x
       bandwidth-contention regime (healthy medians to ~0.7 s observed, r14)
@@ -152,12 +153,14 @@ def test_per_event_latency_warm(gateway, spark, receiver):
       regressions — per-request work measured in seconds."""
     import time
 
-    from duckdb_webhook_gateway_spark.engine.executors import payload_to_df
+    from duckdb_webhook_gateway_spark.engine.executors import _bind_payload
 
-    probe = payload_to_df(spark, {"v": 1})
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan, plan
-    assert "ExistingRDD" not in plan, plan
+    for payload in ({"v": 1}, [{"v": 1}, {"v": "x"}]):
+        name, with_clause = _bind_payload(spark, payload)
+        probe = spark.sql(f"{with_clause}SELECT * FROM {name}")
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan, plan
 
     gateway.register_webhook(
         WebhookConfig(

@@ -78,3 +78,21 @@ def test_bool_and_string_types_preserved(spark):
 def test_scalar_payload_rejected(spark):
     with pytest.raises(TypeError):
         payload_to_df(spark, "just a string")
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        {"s": "${env:HOME}", "t": "${system:user.name} ${spark.app.name} ${x}"},
+        {"${env:HOME}": 1, "k": "$"},
+        [{"s": "${env:HOME}"}, {"s": 1}],  # typed by spark.read.json
+    ],
+)
+def test_variable_references_in_payload_come_back_unchanged(spark, payload):
+    # Spark rewrites ${...} in SQL text before parsing; the payload is bound
+    # into the query text, so none of its bytes may reach that pass.
+    result = execute_transform(spark, "SELECT * FROM {{payload}}", payload)
+    if isinstance(payload, list):
+        assert result == {"results": [{"s": "${env:HOME}"}, {"s": "1"}]}
+    else:
+        assert result == payload

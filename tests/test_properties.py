@@ -480,8 +480,8 @@ def test_winnow_detection_guarantee(spark, host, planted, offset):
 
 # -- payload binding ----------------------------------------------------------
 
-_key = st.text(alphabet=st.sampled_from(list("ab.` _é")), min_size=1, max_size=4)
-_str = st.text(alphabet=st.sampled_from(list("ab'\"\\\n é☃")), max_size=6)
+_key = st.text(alphabet=st.sampled_from(list("ab.` _é${}")), min_size=1, max_size=4)
+_str = st.text(alphabet=st.sampled_from(list("ab'\"\\\n é☃${}")), max_size=6)
 _i64 = st.integers(-(2**63), 2**63 - 1)
 _KINDS = {
     "long": _i64,
@@ -521,6 +521,8 @@ _PARITY_TRANSFORMS = (
     "SELECT k FROM {{payload}} UNION ALL SELECT k + 10 FROM {{payload}}",
     "SELECT count(*) AS n FROM {{payload}};",
     "SELECT * FROM {{payload}} -- trailing comment",
+    "SELECT * FROM {{payload}}; -- comment after the semicolon",
+    "SELECT '--;' AS s, * FROM {{payload}} /* block */ ;",
     "-- leading comment\nSELECT * FROM {{payload}}",
 )
 
